@@ -76,6 +76,7 @@ class BatchRunner:
         self.rng = np.random.default_rng(seed)
         self.tracer, self.traced = tracer, traced
         self.records: list[QueryRecord] = []
+        self.checked: dict[str, bool] = {}
         self.failed = 0
         self.attempted = 0
 
@@ -143,6 +144,7 @@ class BatchRunner:
                 ok, msg = False, f"{name}: EXCEPTION\n{traceback.format_exc()}"
             spark_s += timed.seconds
             self.tracer.record("check", t0, now(), None, query=name, spark_s=timed.seconds)
+            self.checked[name] = ok
             if not ok:
                 self._fail(f"check {msg}")
         return spark_s

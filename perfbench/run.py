@@ -160,14 +160,14 @@ def run_batch(wl, args, spark, entrymod, work, tracer, traced, session_s):
     sf_dir = write_tables(wl["sf"], args.seed, os.path.join(work, "data"))
     runner = BatchRunner(spark, entrymod, wl["queries"], sf_dir, args.seed, tracer, traced)
     setup_s = session_s + runner.warm_and_check(oracle_check)
-    # whole passes, stopping at the pass boundary nearest to --seconds
+    # whole passes, stopping at the pass boundary nearest to --seconds; at
+    # least two, so the latency percentiles rest on 2 x 25 executions
     walls: list[float] = []
-    while not walls or sum(walls) + statistics.mean(walls) / 2 < args.seconds:
+    while len(walls) < 2 or sum(walls) + statistics.mean(walls) / 2 < args.seconds:
         walls.append(runner.run_pass(len(walls) + 1))
     lat = [r.latency_s for r in runner.measured()]
     e2e = {"setup_s": setup_s,
-           # the median pass: robust to a pass slowed by late JIT compilation
-           "ops_per_s": len(runner.names) / statistics.median(walls),
+           "ops_per_s": len(runner.names) * len(walls) / sum(walls),
            "latency_p50_s": statistics.median(lat) if lat else 0.0,
            "latency_p90_s": p90(lat) if lat else 0.0}
     return e2e, runner

@@ -75,6 +75,22 @@ def test_query_lists_exist():
         assert name in qs and name in oracles
 
 
+def test_floor_list_is_one_query_per_warm_time_stratum():
+    import bench
+    from workloads import (BATCH_HEAVY, FLOOR_K, floor_candidates, load_catalogue,
+                           select_floor, usable)
+
+    assert set(BATCH_HEAVY) <= set(bench.HEADLINE)
+    table = load_catalogue()
+    # the committed table covers every candidate, and only those
+    assert sorted(r["name"] for r in table["queries"]) == sorted(floor_candidates())
+    rows = [r["name"] for r in usable(table)]
+    assert FLOOR_QUERIES == select_floor(table) and len(FLOOR_QUERIES) == FLOOR_K
+    n, k = len(rows), FLOOR_K
+    for i, name in enumerate(FLOOR_QUERIES):
+        assert i * n // k <= rows.index(name) < (i + 1) * n // k
+
+
 # tiny configurations of each workload: sf0.001, a few queries, a few files
 _SMOKE = """
 import sys

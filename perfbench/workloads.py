@@ -6,22 +6,76 @@ query execution in the batch workloads and one event in the streaming one.
 
 from __future__ import annotations
 
+import json
+import os
+import statistics
+
 from stream import StreamParams
 
-# closed loop, one client, sf0.01: queries whose time is mostly the fixed
-# per-query floor (plan build, eager driver actions, job scheduling), drawn
-# across the catalogue's time distribution and package modules
-FLOOR_QUERIES = [
-    "reservoir_sample", "epoch_shuffle", "attribution_window_join",
-    "q10_returned_items", "mean_shift", "session_window", "skew_report", "bpe_encode",
-    "attribution_last_touch", "hard_negatives", "cohen_kappa", "length_batches",
-    "q11_important_stock",
+CATALOGUE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "catalogue_sf0.01.json")
+FLOOR_SF = 0.01
+FLOOR_K = 25
+
+# compute-dominated headline queries (largest sf0.1 over sf0.01 time); the
+# floor mix is every other headline query
+BATCH_HEAVY = [
+    "adamic_adar", "theil_sen", "fuzzy_name_match", "item_cf_recs", "distinct_ngrams",
+    "audio_segments", "association_rules", "span_dedup", "web_corpus_prep",
+    "q1_pricing_summary", "triangle_count", "vwap_resample", "dsir_select",
+    "gopher_rules", "bigram_logprob", "simhash_pairs", "novelty_score",
+    "minhash_incremental", "acf_lags", "duplicate_spans", "simhash", "local_clustering",
+    "remove_boilerplate", "bleu_eval", "interpolate_linear", "near_dup_decontaminate",
+    "q18_large_orders", "q3_shipping_priority", "dedup_within", "bloom_membership",
 ]
 
+
+def floor_candidates() -> list[str]:
+    """The ``bench.HEADLINE`` queries outside ``BATCH_HEAVY``."""
+    import bench
+
+    return [n for n in bench.HEADLINE if n not in BATCH_HEAVY]
+
+
+def load_catalogue() -> dict:
+    """The per-query warm-time table written by ``profile_catalogue.py``."""
+    with open(CATALOGUE) as f:
+        return json.load(f)
+
+
+def usable(table: dict) -> list[dict]:
+    """Candidates that passed their oracle check and every warm run, by
+    warm latency (name breaks ties)."""
+    rows = [r for r in table["queries"] if r["oracle_ok"] and r["runs_ok"]]
+    return sorted(rows, key=lambda r: (r["warm_s"], r["name"]))
+
+
+def select_floor(table: dict, k: int = FLOOR_K) -> list[str]:
+    """One query per warm-time stratum: the usable candidates, by warm
+    latency, cut into ``k`` strata of equal count. From the fastest stratum
+    up, take the query that adds the most package modules not yet covered;
+    ties go to the query nearest the stratum's median time, then by name."""
+    rows = usable(table)
+    covered: set[str] = set()
+    out = []
+    for i in range(k):
+        stratum = rows[i * len(rows) // k:(i + 1) * len(rows) // k]
+        mid = statistics.median(r["warm_s"] for r in stratum)
+        best = min(stratum, key=lambda r: (-len(set(r["modules"]) - covered),
+                                           abs(r["warm_s"] - mid), r["name"]))
+        covered |= set(best["modules"])
+        out.append(best["name"])
+    return out
+
+
+# closed loop, one client, sf0.01: the fixed per-query floor (plan build,
+# eager driver actions, job scheduling) dominates these queries
+FLOOR_QUERIES = select_floor(load_catalogue())
+
 WORKLOADS = {
-    "batch_floor": {"kind": "batch", "sf": 0.01, "queries": FLOOR_QUERIES},
+    "batch_floor": {"kind": "batch", "sf": FLOOR_SF, "queries": FLOOR_QUERIES},
     "stream_sessionize": {"kind": "stream", "params": StreamParams(
-        warmup_files=8, backlog_files=48, events_per_file=250, files_per_trigger=8,
+        warmup_files=16, backlog_files=64, events_per_file=250, files_per_trigger=8,
         live_events_per_file=80, tick_s=0.25)},
 }
 

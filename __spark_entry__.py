@@ -2764,29 +2764,26 @@ def q_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized (15B rows at SF100k), unlike the repo's bounded post-agg
     windows. Ordering is (revenue DESC, custkey) via an exact decimal
     negation; decimal prefix combine is associative, so the result is
-    bit-identical to the sequential window. The total is read back off the
-    CHECKPOINTED prefix frame (max of the monotone cumulative — revenues
-    are positive TPC-H prices, so the last prefix IS the sum; an
-    independent ``rev.agg`` would re-scan and re-aggregate the fact table
-    a second time, the corpus.py:849 anti-pattern); the share division
-    casts both exact decimals to double first — one identical IEEE op on
-    both engines."""
+    bit-identical to the sequential window. The total is the running
+    sum's complete fold, read off the same pass's K-row driver summary
+    (``global_running_agg_total``) and baked in as a literal — no second
+    aggregate over the prefix frame and no broadcast join of a 1-row
+    total; the share division casts both exact decimals to double first —
+    one identical IEEE op on both engines."""
     from akka_stream_contrib_spark.operators.global_order import (
-        global_running_sum,
+        global_running_agg_total,
     )
     orders = tables.load(spark, "orders", sf_dir)
     rev = orders.groupBy("o_custkey").agg(
         F.sum(_money("o_totalprice")).alias("_rev"))
-    cum = global_running_sum(
+    cum, (total,) = global_running_agg_total(
         rev.withColumn("_negrev", -F.col("_rev")),
         ["_negrev", "o_custkey"], "_rev", "_cum")
-    total = cum.agg(F.max("_cum").alias("_tot"))
     share = (F.round(
-        F.col("_cum").cast("double") / F.col("_tot").cast("double"), 6)
+        F.col("_cum").cast("double") / F.lit(total).cast("double"), 6)
         + F.lit(0.0))
     return (
-        cum.crossJoin(F.broadcast(total))
-        .select(
+        cum.select(
             "o_custkey", F.col("_rev").cast("double").alias("revenue"),
             share.alias("cum_share"))
         .withColumn(

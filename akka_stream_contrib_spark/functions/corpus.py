@@ -190,33 +190,19 @@ def domain_cap(n_per_domain: int, domain_col: str = "source",
     deterministic pseudo-random sample per domain, unchanged across reruns
     and engines. Adds a 1-based ``dom_rank`` to the survivors.
 
-    Scale shape (r11): SALTED two-phase rank, the `neyman_allocation`
-    device (guide §2 skew) — the domain key is low-cardinality (20
-    sources in the fixtures), so a plain Window.partitionBy(domain) sorts
-    the WHOLE corpus in ≤|domains| reducer tasks. A kept row's rank
-    within any SUBSET containing it lower-bounds its global rank, so
-    phase 1 ranks within (domain, 32-way salt) — parallel bounded sorts —
-    and keeps local rank ≤ n_per_domain: every globally-kept row
-    survives. Phase 2 re-ranks the ≤ 32·n_per_domain survivors per
-    domain; for a row with global rank r ≤ n_per_domain all r−1 better
-    rows also survived, so survivor rank == global rank, and a row with
-    global rank > n_per_domain keeps survivor rank > n_per_domain — the
-    filter selects the IDENTICAL rows with IDENTICAL dom_rank.
+    Scale shape (r11): the domain key is low-cardinality (20 sources in
+    the fixtures), so a plain Window.partitionBy(domain) would sort the
+    WHOLE corpus in ≤|domains| reducer tasks; the cap is the salted
+    two-phase top-n (``global_order.salted_top_n``).
     """
 
     def _apply(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
         from akka_stream_contrib_spark.functions.text import token_id
+        from akka_stream_contrib_spark.operators.global_order import (
+            salted_top_n)
         pri = token_id(F.col(id_col).cast("string"))
-        n_salt = 32
-        w_local = Window.partitionBy(
-            domain_col, F.pmod(F.hash(F.col(id_col)), F.lit(n_salt))
-        ).orderBy(pri, F.col(id_col))
-        pre = (df.withColumn("_lrk", F.row_number().over(w_local))
-               .filter(F.col("_lrk") <= n_per_domain).drop("_lrk"))
-        w = Window.partitionBy(domain_col).orderBy(pri, F.col(id_col))
-        return (pre.withColumn("dom_rank", F.row_number().over(w))
-                .filter(F.col("dom_rank") <= n_per_domain))
+        return salted_top_n(df, domain_col, [pri, F.col(id_col)],
+                            n_per_domain, id_col, "dom_rank")
 
     return _apply
 
@@ -663,15 +649,12 @@ def quantile_normalize(key: str, value: str = "value",
     low-cardinality (event types), so a plain Window.partitionBy(key)
     sorts the WHOLE corpus in ≤|keys| reducer tasks — the hot-key
     straggler shape at 100 TB. With ``seq`` the order (key, value, seq)
-    is TOTAL, so ties cannot straddle a range boundary: range-partition
-    on it (each group spans many contiguous ranges — the
-    `interleave_by_weight` / global_order device), rank locally within
-    (range, key), and add the group's exclusive prefix from a
-    K·|keys|-row driver summary whose per-key grand totals also supply
+    is TOTAL, so ranks come from the keyed range rank
+    (``global_order.global_rank_total``), whose per-key totals also supply
     percent_rank's n−1 denominator. percent_rank over a total order IS
-    (row_number−1)/(n−1) — the identical double division (0.0 for a
-    1-row group, Spark's convention). Without ``seq`` ties make range
-    boundaries unsafe and the single-window form is kept."""
+    (row_number−1)/(n−1) — the identical double division (0.0 for a 1-row
+    group, Spark's convention). Without ``seq`` ties make range boundaries
+    unsafe and the single-window form is kept."""
 
     def _apply(df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -680,48 +663,17 @@ def quantile_normalize(key: str, value: str = "value",
             return df.withColumn(
                 "pct", (F.round(F.percent_rank().over(w), 6) + F.lit(0.0)))
 
-        from akka_stream_contrib_spark.operators.global_order import _ranged
-        ranged = _ranged(df, [key, value, seq])
-        summ = (ranged.groupBy("_pid", F.col(key).alias("_k"))
-                .agg(F.count(F.lit(1)).alias("_c")).collect())
-        per: dict = {}
-        run: dict = {}
-        for r in sorted(summ, key=lambda r: r["_pid"]):
-            p, k, c = r["_pid"], r["_k"], r["_c"]
-            per.setdefault(p, {})[k] = run.get(k, 0)
-            run[k] = run.get(k, 0) + c
-        branches = []
-        for p in sorted(per):
-            nn = {k: o for k, o in per[p].items() if k is not None}
-            inner = None
-            if nn:
-                m = F.create_map(*[F.lit(x) for k, o in nn.items()
-                                   for x in (k, o)])
-                inner = m[F.col(key)]
-            if None in per[p]:
-                nb = F.lit(per[p][None])
-                inner = (F.when(F.col(key).isNull(), nb).otherwise(inner)
-                         if inner is not None
-                         else F.when(F.col(key).isNull(), nb))
-            branches.append(F.when(F.col("_pid") == p, inner))
-        offs = (F.coalesce(*branches, F.lit(0)).cast("bigint")
-                if branches else F.lit(0).cast("bigint"))
-        nn_tot = {k: n for k, n in run.items() if k is not None}
-        n_tot = (F.create_map(*[F.lit(x) for k, n in nn_tot.items()
-                                for x in (k, n)])[F.col(key)]
-                 if nn_tot else F.lit(None).cast("bigint"))
-        if None in run:
-            n_tot = (F.when(F.col(key).isNull(), F.lit(run[None]))
-                     .otherwise(n_tot))
-        w_local = Window.partitionBy("_pid", key).orderBy(
-            F.col(value), F.col(seq))
-        rank = (F.row_number().over(w_local).cast("bigint") + offs)
+        from akka_stream_contrib_spark.operators.global_order import (
+            global_rank_total, summary_lookup)
+        ranked, n_key = global_rank_total(df, [key, value, seq], "_rk",
+                                          partition_by=key)
+        n_tot = summary_lookup(n_key, [key], ranked)
         pct = F.when(
             n_tot > 1,
-            F.round((rank - F.lit(1)).cast("double")
+            F.round((F.col("_rk") - F.lit(1)).cast("double")
                     / (n_tot - F.lit(1)).cast("double"), 6) + F.lit(0.0)
         ).otherwise(F.lit(0.0))
-        return ranged.withColumn("pct", pct).drop("_pid")
+        return ranked.withColumn("pct", pct).drop("_rk")
 
     return _apply
 
@@ -969,12 +921,14 @@ def neyman_allocation(n_total: int, stratum_col: str = "event_type",
     Scale shape: stratum moments reduce from ONE pass of decimal-exact
     sums (Σx, Σx² — variance from exact integers, no unordered float
     accumulation); the ≤|strata|-row allocation table broadcasts back and
-    per-stratum rank is one window over the stratum key.
+    per-stratum rank is the salted two-phase top-n
+    (``global_order.salted_top_n``).
     """
 
     def _apply(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
         from akka_stream_contrib_spark.functions.text import token_id
+        from akka_stream_contrib_spark.operators.global_order import (
+            salted_top_n)
         from akka_stream_contrib_spark.util import drop_stale_caches
         drop_stale_caches()
         x = F.col(value_col).cast("decimal(18,4)")
@@ -1015,32 +969,16 @@ def neyman_allocation(n_total: int, stratum_col: str = "event_type",
                                      .otherwise(proportional))
                              .cast("bigint"))
                  .select("stratum", "n_stratum", "sigma", "alloc"))
-        # Per-stratum hash-rank selection, SALTED two-phase (guide §2 skew):
-        # stratum cardinality is tiny (event types), so a plain
-        # Window.partitionBy(stratum) sorts the WHOLE corpus in <=|strata|
-        # reducer tasks — the hot-key straggler shape at 100 TB. Since every
-        # stratum's allocation is <= n_total (it is a floor of a <=1 share
-        # of n_total), a row can only be kept if its per-stratum rank is
-        # <= n_total, and its rank within any SUBSET containing it is a
-        # lower bound on its global rank. Phase 1 therefore ranks within
-        # (stratum, salt) — parallel, bounded sorts — and keeps local rank
-        # <= n_total: every globally-kept row survives. Phase 2 re-ranks
-        # the <= salt*n_total survivors per stratum; for any row with
-        # global rank r <= n_total all r-1 better rows also survived, so
-        # survivor rank == global rank, and a row with global rank >
-        # n_total keeps survivor rank > n_total >= alloc — the final
-        # filter selects the IDENTICAL set (oracle-verified both SFs).
+        # Per-stratum hash-rank selection: stratum cardinality is tiny
+        # (event types), so it runs as the salted two-phase top-n
+        # (global_order.salted_top_n). Every stratum's allocation is
+        # <= n_total (a floor of a <=1 share of n_total), so the top
+        # n_total rows per stratum hold every kept row.
         sel = df.select(F.col(stratum_col).alias("stratum"),
                         F.col(id_col).alias("_id"),
                         token_id(F.col(id_col).cast("string")).alias("_h"))
-        n_salt = 32
-        w_local = Window.partitionBy(
-            "stratum", F.pmod(F.hash("_id"), F.lit(n_salt))).orderBy("_h", "_id")
-        pre = (sel.withColumn("_lrk", F.row_number().over(w_local))
-               .filter(F.col("_lrk") <= F.lit(n_total)))
-        w = Window.partitionBy("stratum").orderBy("_h", "_id")
-        ranked = pre.select("stratum", "_id",
-                            F.row_number().over(w).alias("_rk"))
+        ranked = salted_top_n(sel, "stratum", ["_h", "_id"], n_total, "_id",
+                              "_rk")
         kept = (ranked.join(F.broadcast(alloc), "stratum")
                 .filter(F.col("_rk") <= F.col("alloc"))
                 .groupBy("stratum")
@@ -2074,15 +2012,13 @@ def interleave_by_weight(weights: "dict[str, float]",
     Scale shape (r11, guide §2 skew): a plain source-partitioned position
     window puts each source's ENTIRE slice in one reducer task — sources
     are few, so at 100 TB that is a multi-TB single-task sort. Positions
-    therefore come from the `global_order` range discipline applied per
-    source: ONE range exchange on (source, order-key) — parallel bounded
-    sorts, each source split across many contiguous ranges — plus a
-    K·|sources|-row driver summary whose exclusive prefixes turn local
-    row_numbers into exact per-source positions. The slot arithmetic is
-    map-side. The output is NOT globally sorted: a training reader
-    range-partitions / sorts by slot at write time (TeraSort shape), or
-    streams shards of the slot space independently; emitting positions
-    instead of forcing a global order keeps the operator one-shuffle.
+    therefore come from the keyed range rank
+    (``global_order.global_rank``) on (source, order-key); the slot
+    arithmetic is map-side. The output is NOT globally sorted: a training
+    reader range-partitions / sorts by slot at write time (TeraSort
+    shape), or streams shards of the slot space independently; emitting
+    positions instead of forcing a global order keeps the operator
+    one-shuffle.
 
     Emits the input columns plus (src_pos, slot); slot rounded to 6.
     """
@@ -2092,7 +2028,6 @@ def interleave_by_weight(weights: "dict[str, float]",
     if default_weight <= 0:
         raise ValueError(
             f"default_weight must be > 0, got {default_weight}")
-    from pyspark.sql import Window
     from akka_stream_contrib_spark.functions.text import token_id
 
     def _apply(df: DataFrame) -> DataFrame:
@@ -2104,48 +2039,16 @@ def interleave_by_weight(weights: "dict[str, float]",
         phase = (token_id(F.concat(F.lit(seed + ":phase:"),
                                    F.col(source_col))) % 1_000_000
                  / F.lit(1_000_000.0))
-        # per-source global positions WITHOUT a one-reducer-per-source
-        # sort: range-partition on (source, order-key) — each source
-        # spans many contiguous ranges — then local row_number within
-        # (range, source) plus the source's exclusive prefix from a
-        # K·|sources|-row driver summary (the global_order discipline;
-        # (_ord, id) is a total order so ties cannot straddle a range)
-        from akka_stream_contrib_spark.operators.global_order import _ranged
+        # (_ord, id) is a total order, so ties cannot straddle a range
+        from akka_stream_contrib_spark.operators.global_order import (
+            global_rank)
         from akka_stream_contrib_spark.util import drop_stale_caches
         drop_stale_caches()
         staged = df.withColumn("_ord", F.md5(
             F.concat(F.lit(seed + ":ord:"), sid)))
-        ranged = _ranged(staged, [source_col, "_ord", id_col])
-        summ = (ranged.groupBy("_pid", F.col(source_col).alias("_src"))
-                .agg(F.count(F.lit(1)).alias("_c")).collect())
-        per: dict = {}
-        run: dict = {}
-        for r in sorted(summ, key=lambda r: r["_pid"]):
-            p, s, c = r["_pid"], r["_src"], r["_c"]
-            per.setdefault(p, {})[s] = run.get(s, 0)
-            run[s] = run.get(s, 0) + c
-        branches = []
-        for p in sorted(per):
-            nn = {s: o for s, o in per[p].items() if s is not None}
-            inner = None
-            if nn:
-                m = F.create_map(*[F.lit(x) for s, o in nn.items()
-                                   for x in (s, o)])
-                inner = m[F.col(source_col)]
-            if None in per[p]:
-                nb = F.lit(per[p][None])
-                inner = (F.when(F.col(source_col).isNull(), nb)
-                         .otherwise(inner) if inner is not None
-                         else F.when(F.col(source_col).isNull(), nb))
-            branches.append(F.when(F.col("_pid") == p, inner))
-        offs = (F.coalesce(*branches, F.lit(0)).cast("bigint")
-                if branches else F.lit(0).cast("bigint"))
-        win = (Window.partitionBy("_pid", source_col)
-               .orderBy(F.col("_ord"), F.col(id_col)))
-        return (ranged
-                .withColumn("src_pos",
-                            F.row_number().over(win).cast("bigint") + offs)
-                .drop("_pid")
+        ranked = global_rank(staged, [source_col, "_ord", id_col], "src_pos",
+                             partition_by=source_col)
+        return (ranked
                 # slot is TRUNCATED to 6 dp, not rounded: (pos - phase)
                 # has exactly 6 decimal digits, so /w lands on exact
                 # .xxxxxx5 halves where Spark's BigDecimal HALF_UP and a

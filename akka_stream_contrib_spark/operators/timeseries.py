@@ -434,46 +434,23 @@ def autocorrelation(key: str = "event_type", value: str = "value",
     Scale shape (r11): the key is low-cardinality (event types), so a
     plain Window.partitionBy(key) lag sorts the WHOLE corpus in ≤|keys|
     reducer tasks — the hot-key straggler shape at 100 TB. ``seq`` gives
-    (key, seq) a total order, so the stream range-partitions on it (each
-    key split across many contiguous ranges) and every range is prepended
-    with GHOST rows — the previous range's last ``max(lags)`` rows per
-    key, which immediately precede the range's own head in the global
-    order — before a LOCAL lag window; ghosts then drop out. Each row's
-    lag values are therefore exactly the contiguous-window values (a
-    key's global head still lags to NULL — its first range has no
-    ghosts), in bounded per-range sorts. One map-combined (key, lag)
-    aggregation of the unpivoted pairs follows — per-key output is
-    ``len(lags)`` rows regardless of series length.
+    (key, seq) a total order, so every lag comes from the keyed multi-lag
+    range primitive (``global_order.global_lag``). One map-combined
+    (key, lag) aggregation of the unpivoted pairs follows — per-key output
+    is ``len(lags)`` rows regardless of series length.
 
     Reference anchor: none (time-series extension; same family as
     `rolling_zscore`).
     """
 
     def _apply(df: DataFrame) -> DataFrame:
-        from akka_stream_contrib_spark.operators.global_order import _ranged
+        from akka_stream_contrib_spark.operators.global_order import global_lag
 
         y = (F.col(value).cast("decimal(12,2)") * 100).cast("bigint")
-        max_lag = max(lags)
         staged = df.select(F.col(key), F.col(seq).alias("_s"), y.alias("_y"))
-        ranged = _ranged(staged, [key, "_s"])
-        # materialize the cache with one cheap job: the tails branch and
-        # the main branch both read it inside ONE union job, and an
-        # unmaterialized pipeline cache referenced twice recomputes
-        # concurrently (the r11 k_core lesson)
-        ranged.count()
-        wd = Window.partitionBy("_pid", key).orderBy(F.col("_s").desc())
-        tails = (ranged.withColumn("_rd", F.row_number().over(wd))
-                 .filter(F.col("_rd") <= max_lag).drop("_rd")
-                 .withColumn("_pid", F.col("_pid") + F.lit(1))
-                 .withColumn("_ghost", F.lit(True)))
-        aug = ranged.withColumn("_ghost", F.lit(False)).unionByName(tails)
-        win = Window.partitionBy("_pid", key).orderBy("_s")
-        # lag columns FIRST (one WindowExec pass), THEN the explode —
-        # generators cannot contain window expressions
-        lagged = (aug.select(
-            F.col(key), F.col("_y"), F.col("_ghost"),
-            *[F.lag("_y", lag).over(win).alias(f"_x{lag}") for lag in lags])
-            .filter(~F.col("_ghost")))
+        lagged = global_lag(staged, [key, "_s"], F.col("_y"),
+                            [f"_x{lag}" for lag in lags], lags=lags,
+                            partition_by=key)
         pairs = [F.struct(F.lit(lag).alias("lag"),
                           F.col(f"_x{lag}").alias("x"),
                           F.col("_y").alias("y")) for lag in lags]

@@ -39,7 +39,8 @@ def get_spark(app_name: str = "akka-stream-contrib-spark",
         # and with the default (false) a cached range/hash shuffle keeps all
         # `shuffle.partitions` slices — every cache consumer then runs one
         # task per slice (measured 10 → 134 tasks on the global_order
-        # operators when _ranged moved from localCheckpoint to persist)
+        # operators when their range cache moved from localCheckpoint to
+        # persist)
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -416,7 +416,8 @@ def test_interval_overlap_join_match_once_and_equi_keys(spark):
     assert [(r.lid, r.rid) for r in rows] == [("a", "x")]
 
 
-def test_global_order_primitives_match_single_partition_window(spark):
+def test_global_order_primitives_match_single_partition_window(
+        spark, shuffle_layout):
     """global_rank / global_running_sum / global_lag must equal the naive
     Window.orderBy() results while never materializing a single partition."""
     from pyspark.sql import Window
@@ -427,22 +428,30 @@ def test_global_order_primitives_match_single_partition_window(spark):
     df = spark.range(0, 5000, 1, 16).select(
         F.col("id").alias("seq"),
         (F.pmod(F.col("id") * 7919, F.lit(100)) + 1).alias("v"))
+    # NULL values every 7th row: a ghost/boundary value must not stand in
+    # for a genuinely NULL predecessor
+    vn = F.when(F.col("seq") % 7 == 0, F.lit(None)).otherwise(F.col("v"))
     w = Window.orderBy("seq")
     wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    expect = {r.seq: (r.rnk, r.cum, r.prev) for r in df.select(
+    expect = {r.seq: (r.rnk, r.cum, r.prev, r.prev_n) for r in df.select(
         "seq", F.row_number().over(w).alias("rnk"),
         F.sum("v").over(wc).alias("cum"),
-        F.lag("v").over(w).alias("prev")).collect()}
+        F.lag("v").over(w).alias("prev"),
+        F.lag(vn).over(w).alias("prev_n")).collect()}
 
     got_rank = {r.seq: r.rnk for r in global_rank(df, "seq", "rnk").collect()}
     got_cum = {r.seq: r.cum for r in
                global_running_sum(df, "seq", "v", "cum").collect()}
     got_lag = {r.seq: r.prev for r in
                global_lag(df, "seq", F.col("v"), "prev").collect()}
-    for s, (rnk, cum, prev) in expect.items():
+    with shuffle_layout(spark, 16):  # 16 ranges: AQE cannot merge them
+        got_lag_n = {r.seq: r.prev_n for r in
+                     global_lag(df, "seq", vn, "prev_n").collect()}
+    for s, (rnk, cum, prev, prev_n) in expect.items():
         assert got_rank[s] == rnk
         assert got_cum[s] == cum
         assert got_lag[s] == prev
+        assert got_lag_n[s] == prev_n
 
 
 def test_unkeyed_token_throttle_plan_has_no_global_window(spark):

@@ -19,7 +19,7 @@ SF = "/root/testdata/sf0.001"
 
 # query -> max shuffle exchanges (audited 2026-08-13, spark 4.1, AQE on,
 # 64 MB broadcast threshold; sf0.001 statistics)
-# r10: global_order's _ranged moved from eager localCheckpoint to a
+# r10: global_order's range cache moved from eager localCheckpoint to a
 # pipeline-scoped persist, so every global_rank/running-agg consumer's
 # range shuffle (and its upstream lineage) is now VISIBLE in the explained
 # plan instead of hidden behind a checkpoint stub — the executed shuffles
@@ -221,11 +221,10 @@ BUDGET = {
     # user window, transition agg, tiny per-type share window
     "event_transitions": 3,
     "login_streaks": 2,
-    # two-phase range prefix over the custkey aggregate (pid-window
-    # exchange on the checkpointed ranged frame + 1-row total agg +
-    # custkey agg): +1 vs the old budget, which bought the removal of the
-    # unbounded single-partition cumulative window (SCALE.md)
-    "pareto_customers": 5,
+    # two-phase range prefix over the custkey aggregate: custkey agg +
+    # range exchange + pid-window exchange; the total is the prefix
+    # pass's complete fold (a literal), so no 1-row total agg (5 -> 3)
+    "pareto_customers": 3,
     # deletion-neighborhood posting lists: variant groupBy + pair dedup
     "fuzzy_name_match": 2,
     # daily agg + per-segment stats agg (dims broadcast)
@@ -463,10 +462,11 @@ BUDGET = {
     "auc_roc": 4,
     # both flank frames share the one key-window shuffle
     "mean_shift": 1,
-    # r11 ghost-row range lag (no whole-corpus-per-key sort): range
-    # exchange + the (range, key) tail window + the (range, key) lag
-    # window over the ghost union + the (key, lag) moment agg
-    "acf_lags": 4,
+    # keyed multi-lag global_lag (no whole-corpus-per-key sort): range
+    # exchange + the (range, key) lag window + the (key, lag) moment agg;
+    # the ghost values come from the driver summary, not an in-plan tail
+    # window over the whole corpus (4 -> 3)
+    "acf_lags": 3,
     # vocab_topk reduction; rank is the benign post-limit window over
     # <= top_k rows (was a two-phase global rank: 2 -> 1)
     "zipf_fit": 1,

@@ -300,8 +300,8 @@ def test_pareto_cumulative_share_avoids_single_partition_window(spark):
     window (the customer aggregate is corpus-sized — the ONE post-agg window
     in the registry that grows with the data) onto the two-phase range
     prefix sum: every Window in the plan must be partitioned by the range
-    pid (the remaining SinglePartition exchange is the benign 1-row total
-    aggregate, not a data-sized window sort)."""
+    pid (the share's denominator is the prefix pass's complete fold, a
+    literal — no total aggregate joins back)."""
     import re
     df = entry.q_pareto_customers(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -266,29 +266,58 @@ def test_scd2_matches_model(states):
     assert got == expect
 
 
-@given(st.lists(st.integers(min_value=-1000, max_value=1000),
+def global_order_model(rows):
+    """Sequential reference for rows (seq, key, v) in seq order: per-key
+    1-based rank, running sum (NULLs skipped, NULL until the first value)
+    and lags 1..3 (NULL before the key's head)."""
+    state, out = {}, {}
+    for seq, k, v in rows:
+        rank, run, hist = state.get(k, (0, None, []))
+        if v is not None:
+            run = v if run is None else run + v
+        lags = tuple(hist[-lag] if len(hist) >= lag else None
+                     for lag in (1, 2, 3))
+        state[k] = (rank + 1, run, hist + [v])
+        out[seq] = (rank + 1, run, lags)
+    return out
+
+
+@given(st.lists(st.tuples(st.sampled_from(["p", "q", None]),
+                          st.one_of(st.none(),
+                                    st.integers(min_value=-1000,
+                                                max_value=1000))),
                 min_size=1, max_size=60),
-       st.integers(min_value=1, max_value=6))
+       st.integers(min_value=1, max_value=6),
+       st.sampled_from([1, 7, 64]))
 @settings(max_examples=15, deadline=None)
-def test_global_order_matches_model(values, n_parts):
-    """global_rank / running sum / lag equal the sequential model for ANY
-    input partitioning (the two-phase range form must be placement-proof)."""
+def test_global_order_matches_model(shuffle_layout, rows, n_parts,
+                                    shuffle_parts):
+    """global_rank / multi-lag, unkeyed and keyed by a 3-value key (one of
+    them NULL), and the unkeyed running sum equal the sequential model for
+    ANY input partitioning, shuffle-partition count (AQE off, so tiny and
+    empty ranges survive) and NULL pattern in the values."""
     spark = _get_spark()
     from akka_stream_contrib_spark.operators import (
         global_lag, global_rank, global_running_agg)
-    rows = [(i, v) for i, v in enumerate(values)]
-    df = spark.createDataFrame(rows, "seq int, v long").repartition(n_parts)
-    ranks = {r.seq: r.rnk for r in global_rank(df, "seq", "rnk").collect()}
-    sums = {r.seq: r.cum for r in
-            global_running_agg(df, "seq", "v", "cum", fn="sum").collect()}
-    lags = {r.seq: r.prev for r in
-            global_lag(df, "seq", F.col("v"), "prev").collect()}
-    run = 0
-    for i, v in enumerate(values):
-        run += v
-        assert ranks[i] == i + 1
-        assert sums[i] == run
-        assert lags[i] == (values[i - 1] if i > 0 else None)
+    df = spark.createDataFrame(
+        [(i, k, v) for i, (k, v) in enumerate(rows)],
+        "seq int, k string, v long").repartition(n_parts)
+    for keys in ([], ["k"]):
+        order = [*keys, "seq"]
+        expect = global_order_model(
+            [(i, k if keys else None, v) for i, (k, v) in enumerate(rows)])
+        with shuffle_layout(spark, shuffle_parts):
+            ranks = {r.seq: r.rnk for r in global_rank(
+                df, order, "rnk", partition_by=keys).collect()}
+            lags = {r.seq: (r.l1, r.l2, r.l3) for r in global_lag(
+                df, order, F.col("v"), ["l1", "l2", "l3"], lags=(1, 2, 3),
+                partition_by=keys).collect()}
+            if not keys:
+                sums = {r.seq: r.cum for r in global_running_agg(
+                    df, order, "v", "cum", fn="sum").collect()}
+                assert sums == {s: run for s, (_, run, _) in expect.items()}
+        got = {s: (ranks[s], lags[s]) for s in ranks}
+        assert got == {s: (rk, lg) for s, (rk, _, lg) in expect.items()}, keys
 
 
 def _lev(a: str, b: str) -> int:

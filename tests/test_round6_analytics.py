@@ -134,6 +134,28 @@ def test_acf_matches_python_model(spark):
         assert got[lag][1] == pytest.approx(_pearson(xs, ys), abs=1e-6)
 
 
+def test_acf_tiny_ranges_match_one_partition(spark, shuffle_layout):
+    """64 range partitions over an 80-row, 2-key series leave most ranges
+    shorter than max(lags), and some empty: every lag must still see the
+    rows that precede it, so the ACF equals the 1-partition result (the
+    ghost rows come from as many earlier ranges as the lag needs)."""
+    from akka_stream_contrib_spark.operators.timeseries import (
+        autocorrelation,
+    )
+    rows = [(i, "ab"[i % 2], float((i * 37) % 11)) for i in range(80)]
+    df = spark.createDataFrame(rows, "event_id int, event_type string, value double")
+
+    def acf(partitions):
+        with shuffle_layout(spark, partitions):
+            return sorted(tuple(r) for r in df.transform(
+                autocorrelation(lags=(1, 2, 3))).collect())
+
+    one = acf(1)
+    assert [(k, lag, n) for k, lag, n, _ in one] == [
+        (k, lag, 40 - lag) for k in "ab" for lag in (1, 2, 3)]
+    assert acf(64) == one
+
+
 def test_acf_alternating_series_is_negative_at_lag1(spark):
     from akka_stream_contrib_spark.operators.timeseries import (
         autocorrelation,

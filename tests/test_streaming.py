@@ -9,6 +9,7 @@ import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from akka_stream_contrib_spark.streaming import (
     accumulate_while_unchanged_stream,
@@ -1883,10 +1884,12 @@ def test_interleave_stream_single_batch_equals_batch_form(spark, tmp_path):
            for r in spark.sql("select * from ilstream").collect()}
     batch = spark.createDataFrame([(r["doc_id"], r["source"]) for r in rows],
                                   "doc_id long, source string")
-    want = {r.doc_id: (r.src_pos, r.slot)
-            for r in batch.transform(
-                interleave_by_weight({"a": 2.0, "b": 1.0})).collect()}
+    batch_out = batch.transform(interleave_by_weight({"a": 2.0, "b": 1.0}))
+    want = {r.doc_id: (r.src_pos, r.slot) for r in batch_out.collect()}
     assert got == want
+    # both forms type positions as bigint, whatever their magnitude
+    for schema in (spark.table("ilstream").schema, batch_out.schema):
+        assert isinstance(schema["src_pos"].dataType, LongType)
 
 
 def test_interleave_stream_positions_continue_across_batches(spark, tmp_path):

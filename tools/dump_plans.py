@@ -35,8 +35,8 @@ SHOWCASE = {
     "quantized_ann": "int8 quantization + integer dot products entirely "
         "map-side: zero exchanges, top-k via TakeOrderedAndProject",
     "pareto_customers": "cumulative share via the two-phase range prefix "
-        "sum over the customer aggregate (pid-window exchange + broadcast "
-        "1-row total): no single-partition window anywhere",
+        "sum over the customer aggregate (pid-window exchange; the total is "
+        "the prefix pass's complete fold): no single-partition window anywhere",
     "ann_ivf_all": "distributed IVF ANN: one Arrow assignment pass "
         "(broadcast centroids), cogrouped per-cell GEMM — the only exchange "
         "is the hash shuffle on cell id; no driver-side corpus collect",

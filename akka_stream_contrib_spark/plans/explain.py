@@ -5,9 +5,38 @@ query's plan has the shape that survives scale — filters pushed into the
 parquet scan, small dimensions broadcast (no shuffle of the fact table),
 bounded exchange counts — rather than hoping the optimizer did the right
 thing.
+
+``plan_census`` is the one reader of a formatted plan's node tree. Its
+lenses, each a count of DISTINCT plan nodes:
+
+- ``exchanges``: shuffle exchanges (broadcast exchanges and ReusedExchange
+  references are other node names: a reuse re-reads shuffle files);
+- ``scans``: parquet scans per table;
+- ``python_evals``: ArrowEvalPython / BatchEvalPython nodes;
+- ``single_partition``: exchanges onto ONE partition (a one-reducer funnel);
+- ``cartesian`` / ``bnlj``: CartesianProduct / BroadcastNestedLoopJoin
+  (pair-space blowups);
+- ``hot_hash``: hash exchanges keyed only on ``LOW_CARD`` columns, per key
+  set (a hot-key funnel into that many reducers at any scale).
+
+Distinct means: a MAIN-plan node counts by node id, so two independent
+shuffles count twice even when their printed arguments collide (e.g. two
+SinglePartition aggregates). A node under an InMemoryRelation prints once
+per consumer of the cache — and under AQE once more as the cache's
+initial-plan copy, where an exchange gets a new id — while it executes AT
+MOST once (the cache build). It counts once per (outermost owning
+relation's arguments, node arguments), plan_id stripped. The relation's
+arguments carry its OUTPUT expr ids, identical across reprints of one
+cache and distinct between caches, so the reprints collapse while two
+caches whose build shuffles print the same partitioning still count
+separately. A node that prints no arguments (a scan, a join) keeps one id
+in every reprint, so it counts once per id. The walk covers every
+section: a shuffle inside a subquery is a real shuffle.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame
 
@@ -37,61 +66,94 @@ def assert_broadcast_join(df: DataFrame, min_count: int = 1) -> None:
             f"expected ≥{min_count} BroadcastHashJoin, found {n}")
 
 
-def count_exchanges(df: DataFrame) -> int:
-    """Number of DISTINCT shuffle exchanges (excludes broadcast exchanges
-    and ReusedExchange references) — the scale-limiting resource of a plan.
+#: columns whose domain is bounded by the fixture schema (≤ ~20 values): a
+#: hash exchange keyed ONLY on these funnels the corpus into that many
+#: reducer tasks at any scale
+LOW_CARD = frozenset({
+    "event_type", "lang", "source", "l_returnflag", "l_linestatus",
+    "o_orderpriority", "o_orderstatus", "side", "slice", "bin", "label",
+    "stratum", "branch"})
 
-    MAIN-plan exchanges count by node id (two independent shuffles always
-    count twice, even when their printed arguments collide — e.g. two
-    SinglePartition aggregates). Exchanges nested under an InMemoryRelation
-    print once per consumer — and under AQE once more as the cache's
-    initial-plan copy — while they execute AT MOST once (the cache build);
-    those dedupe by partitioning ARGUMENTS (plan_id stripped), which
-    collapses the reprints of one build plan without hiding main-plan
-    shuffles. A ReusedExchange re-reads shuffle files instead of
-    re-shuffling and is excluded by name."""
-    import re
-    plan = formatted_plan(df)
-    # tree walk over EVERY section (main plan AND "===== Subqueries ====="
-    # trees — a shuffle inside a subquery is a real shuffle): a node line
-    # renders as "...+- NodeName (N)"; children are indented deeper, so
-    # everything deeper than an InMemoryRelation line (until indentation
-    # returns) is that cache's build-plan rendering. A section boundary
-    # resets the indent stack.
-    owner, main_ids, stack = {}, set(), []
+# a tree line renders as "...+- [* ]NodeName (N)"; children indent deeper
+_NODE_LINE = re.compile(r"([A-Za-z][A-Za-z ]*?) \((\d+)\)\s*$")
+
+
+def plan_census(plan: str) -> dict:
+    """The lenses of the module docstring over one formatted plan:
+    ``scans`` and ``hot_hash`` map a table / key set to a count, the other
+    lenses are counts."""
+    # tree walk: everything deeper than an InMemoryRelation line (until the
+    # indentation returns) is that cache's build-plan rendering; a section
+    # boundary ("===== Subqueries =====", "Subquery:N ...") resets the stack
+    names, main, owner, stack = {}, set(), {}, []
     for line in plan.splitlines():
         if line.startswith("=====") or line.lstrip().startswith("Subquery"):
             stack = []
             continue
-        m = re.search(r"([A-Za-z][A-Za-z]*) \((\d+)\)\s*$", line)
+        m = _NODE_LINE.search(line)
         if not m:
             continue
-        name, node_id = m.group(1), m.group(2)
+        name, node_id = m.group(1).strip(), m.group(2)
         indent = re.search(r"[A-Za-z*]", line).start()
         while stack and indent <= stack[-1][0]:
             stack.pop()
-        if name == "Exchange":
-            if stack:
-                owner[node_id] = stack[0][1]  # outermost owning relation
-            else:
-                main_ids.add(node_id)
+        names[node_id] = name
+        if stack:
+            owner[node_id] = stack[0][1]  # outermost owning relation
+        else:
+            main.add(node_id)
         if name == "InMemoryRelation":
             stack.append((indent, node_id))
-    # details: node id -> Arguments. Cached build exchanges dedupe by
-    # (owning relation's arguments, exchange arguments): the relation's
-    # detail carries its OUTPUT expr ids, identical across reprints of one
-    # cache and distinct between different caches — so two caches whose
-    # build shuffles print the same partitioning (e.g. SinglePartition)
-    # still count separately, while AQE/consumer reprints collapse.
-    args = {}
+    # details section: node id -> its block ("(N) Name" up to the next one)
+    blocks, args = {}, {}
     for block in re.split(r"\n(?=\(\d+\) )", plan):
         m = re.match(r"\((\d+)\) [A-Za-z]", block)
-        a = re.search(r"Arguments: ([^\n]*)", block) if m else None
-        if m and a:
+        if not m:
+            continue
+        blocks[m.group(1)] = block
+        a = re.search(r"Arguments: ([^\n]*)", block)
+        if a:
             args[m.group(1)] = re.sub(r"\[plan_id=\d+\]", "", a.group(1))
-    cached = {(args.get(rel, rel), args.get(ex, ex))
-              for ex, rel in owner.items()}
-    return len(main_ids) + len(cached)
+    # one representative node id per distinct node
+    distinct = {(names[i], i): i for i in main}
+    for i, rel in owner.items():
+        key = ((names[i], args.get(rel, rel), args[i]) if i in args
+               else (names[i], i))
+        distinct[key] = i
+    scans, hot_hash = {}, {}
+    census = {"exchanges": 0, "scans": scans, "python_evals": 0,
+              "single_partition": 0, "cartesian": 0, "bnlj": 0,
+              "hot_hash": hot_hash}
+    for (name, *_), i in distinct.items():
+        kind = name.split()[0]  # "BroadcastNestedLoopJoin Cross BuildRight"
+        if kind == "Exchange":
+            census["exchanges"] += 1
+            census["single_partition"] += args.get(i, "").startswith(
+                "SinglePartition")
+            for keys in re.findall(r"hashpartitioning\(([^)]*)\)",
+                                   args.get(i, "")):
+                cols = {c.strip().split("#")[0] for c in keys.split(",")
+                        if "#" in c} - {""}
+                if cols and cols <= LOW_CARD:
+                    hot = ",".join(sorted(cols))
+                    hot_hash[hot] = hot_hash.get(hot, 0) + 1
+        elif name.startswith("Scan parquet"):
+            loc = re.search(r"Location: \w+ \[([^\]]*)\]", blocks[i]).group(1)
+            table = loc.rstrip("/").rsplit("/", 1)[-1].removesuffix(".parquet")
+            scans[table] = scans.get(table, 0) + 1
+        elif kind in ("ArrowEvalPython", "BatchEvalPython"):
+            census["python_evals"] += 1
+        elif kind == "CartesianProduct":
+            census["cartesian"] += 1
+        elif kind == "BroadcastNestedLoopJoin":
+            census["bnlj"] += 1
+    return census
+
+
+def count_exchanges(df: DataFrame) -> int:
+    """Number of distinct shuffle exchanges — the scale-limiting resource of
+    a plan (see the module docstring for what counts once)."""
+    return plan_census(formatted_plan(df))["exchanges"]
 
 
 def assert_partition_pruned(df: DataFrame, column: str) -> None:

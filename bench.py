@@ -343,22 +343,25 @@ def main() -> None:
     # javac time (a fixed per-plan cost a long-lived cluster pays once)
     # sf0.01 (not 0.001): enough rows that hot loops clear the JIT C2 threshold
     warm_sf = "/root/testdata/sf0.01"
+    # every swallowed failure is recorded as "<phase> <name>: <error>", so
+    # one bad query neither stops the run nor vanishes from its record
+    errors: list[str] = []
     for name in HEADLINE:
         fn = qs.get(name)
         if fn is None:
             continue
         try:
             fn(spark, warm_sf).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
+        except Exception as ex:  # noqa: BLE001
+            errors.append(f"warm-up {name}: {ex}")
     # warm the TARGET SF's file listing + footers (session FileStatusCache):
     # otherwise the first timed query pays the directory listing for every
     # table it touches — a per-cluster-lifetime cost, not a per-query one
     for t in tables.TABLE_NAMES:
         try:
             tables.load(spark, t, SF_DIR).limit(1).collect()
-        except Exception:
-            pass
+        except Exception as ex:  # noqa: BLE001
+            errors.append(f"listing {t}: {ex}")
     timings: dict[str, float] = {}
     floors: dict[str, float] = {}
     warms: dict[str, float] = {}
@@ -374,8 +377,8 @@ def main() -> None:
             t0 = time.monotonic()
             fn(spark, warm_sf).write.mode("overwrite").format("noop").save()
             floors[name] = round(time.monotonic() - t0, 3)
-        except Exception:
-            pass
+        except Exception as ex:  # noqa: BLE001
+            errors.append(f"floor {name}: {ex}")
         t0 = time.monotonic()
         df = fn(spark, SF_DIR)
         df.write.mode("overwrite").format("noop").save()
@@ -397,7 +400,11 @@ def main() -> None:
     # the same plans do when the scan splits. Identical rows, identical
     # results; only the parquet chunking differs.
     splits: dict[str, float] = {}
-    split_dir = _split_fixture_copy()
+    try:
+        split_dir = _split_fixture_copy()
+    except Exception as ex:  # noqa: BLE001
+        errors.append(f"split fixture: {ex}")
+        split_dir = None
     if split_dir:
         # scope a small maxPartitionBytes to this pass: it re-creates the
         # production relation file-size >> partition-bytes, so the 32 row
@@ -414,8 +421,8 @@ def main() -> None:
                     t0 = time.monotonic()
                     fn(spark, split_dir).write.mode("overwrite").format("noop").save()
                     splits[name] = round(time.monotonic() - t0, 3)
-                except Exception:
-                    pass
+                except Exception as ex:  # noqa: BLE001
+                    errors.append(f"split {name}: {ex}")
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
     base_total, base_queries, base_runs = duckdb_baseline(
@@ -443,20 +450,20 @@ def main() -> None:
                     "overwrite").format("noop").save()
                 return None
             except Exception as ex:  # noqa: BLE001
-                return f"{name}: {ex}"
+                return f"pipelined {name}: {ex}"
 
         t0 = time.monotonic()
-        pipe_errs: list[str] = []
+        n_errors = len(errors)
         # chunked retain scopes: cache storage is bounded by one chunk's
         # pipelines (retain_pipeline_caches' documented contract), not by
         # the whole subset's accumulated persists at a larger SF
         for i in range(0, len(pipe_names), 16):
             with retain_pipeline_caches():
                 with ThreadPoolExecutor(max_workers=8) as pool:
-                    pipe_errs += [e for e in pool.map(
+                    errors += [e for e in pool.map(
                         _run_noop, pipe_names[i:i + 16]) if e]
-        if pipe_errs:
-            print(f"# pipelined pass errors: {pipe_errs}",
+        if len(errors) > n_errors:
+            print(f"# pipelined pass errors: {errors[n_errors:]}",
                   file=sys.stderr, flush=True)
         else:
             pipelined_wall = round(time.monotonic() - t0, 3)
@@ -515,6 +522,7 @@ def main() -> None:
             "baseline_duckdb_pipelined_sec": base_pipelined,
             "floor_probe_failed": floor_missing,
             "split_probe_failed": split_missing,
+            "errors": errors,
             "stable_set": {
                 "names": STABLE_SET,
                 "prev_round": STABLE_PREV_ROUND,
@@ -579,44 +587,42 @@ def main() -> None:
         "spark_pipelined_oracle_subset_sec": pipelined_wall,
         "baseline_duckdb_pipelined_sec": base_pipelined,
         "stable_set": stable_block,
+        "n_errors": len(errors),
         "detail": "BENCH_DETAIL.json",
     }, separators=(",", ":")), flush=True)
     spark.stop()
 
 
-def _split_fixture_copy() -> str | None:
+def _split_fixture_copy() -> str:
     """Re-encode SF_DIR's tables as 32-row-group parquet under /tmp (same
-    rows, splittable scans). Returns the directory, or None on failure."""
-    try:
-        import hashlib
-        import pyarrow.parquet as pq
+    rows, splittable scans). Returns the directory."""
+    import hashlib
+    import pyarrow.parquet as pq
 
-        # key the cache dir by the FULL source path (two fixture trees with
-        # the same basename must not share a copy), and re-encode whenever
-        # the source's (mtime, size) identity changes in ANY direction — an
-        # mtime-preserving regeneration still flips size or mtime equality
-        tag = hashlib.md5(os.path.abspath(SF_DIR).encode()).hexdigest()[:12]
-        out = f"/tmp/spark-graft-split-{tag}"
-        os.makedirs(out, exist_ok=True)
-        for t in tables.TABLE_NAMES:
-            src = os.path.join(SF_DIR, f"{t}.parquet")
-            dst = os.path.join(out, f"{t}.parquet")
-            marker = dst + ".src"
-            if not os.path.exists(src):
-                continue
-            ident = f"{os.path.getmtime(src)}:{os.path.getsize(src)}"
-            if os.path.exists(dst) and os.path.exists(marker):
-                with open(marker) as mf:
-                    if mf.read() == ident:
-                        continue
-            tab = pq.read_table(src)
-            pq.write_table(tab, dst,
-                           row_group_size=max(1, tab.num_rows // 32))
-            with open(marker, "w") as mf:
-                mf.write(ident)
-        return out
-    except Exception:
-        return None
+    # key the cache dir by the FULL source path (two fixture trees with
+    # the same basename must not share a copy), and re-encode whenever
+    # the source's (mtime, size) identity changes in ANY direction — an
+    # mtime-preserving regeneration still flips size or mtime equality
+    tag = hashlib.md5(os.path.abspath(SF_DIR).encode()).hexdigest()[:12]
+    out = f"/tmp/spark-graft-split-{tag}"
+    os.makedirs(out, exist_ok=True)
+    for t in tables.TABLE_NAMES:
+        src = os.path.join(SF_DIR, f"{t}.parquet")
+        dst = os.path.join(out, f"{t}.parquet")
+        marker = dst + ".src"
+        if not os.path.exists(src):
+            continue
+        ident = f"{os.path.getmtime(src)}:{os.path.getsize(src)}"
+        if os.path.exists(dst) and os.path.exists(marker):
+            with open(marker) as mf:
+                if mf.read() == ident:
+                    continue
+        tab = pq.read_table(src)
+        pq.write_table(tab, dst,
+                       row_group_size=max(1, tab.num_rows // 32))
+        with open(marker, "w") as mf:
+            mf.write(ident)
+    return out
 
 
 def duckdb_baseline(names: list[str]) -> tuple[

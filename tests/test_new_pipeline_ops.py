@@ -1595,10 +1595,12 @@ def test_domain_cap_salted_no_whole_domain_sort(spark):
 
 
 def test_autocorrelation_range_partitioned_no_key_sort(spark):
-    # r11 skew rewrite: the lag window runs within (range, key) over the
-    # ghost-row union — a hash exchange on the key alone (one reducer
-    # sorting a key's whole series) must NOT appear; values are pinned by
-    # the test_round6 ACF value checks and the sf0.1 oracle (multi-range).
+    # r11 skew rewrite: the lag window runs within (range, key), and a
+    # row near a range start reads its ghost predecessors through
+    # global_order._range_lookup — a hash exchange on the key alone (one
+    # reducer sorting a key's whole series) must NOT appear; values are
+    # pinned by the test_round6 ACF value checks and the sf0.1 oracle
+    # (multi-range).
     from akka_stream_contrib_spark.operators.timeseries import autocorrelation
     from akka_stream_contrib_spark.plans import count_exchanges
     df = spark.createDataFrame([(1, "a", 1.0)],

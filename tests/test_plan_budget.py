@@ -6,16 +6,26 @@ catches a semantics regression.
 
 Budgets are ceilings (==audited count at authoring time); improving a plan
 means lowering the budget, never raising it without a SCALE.md argument.
+The same plan walk's other lenses (parquet scans per table, Python eval
+nodes, SinglePartition exchanges, cartesian / nested-loop joins,
+low-cardinality hash keys) are ceilings too, pinned in plan_census.json
+and rewritten by ``python tools/plan_census.py``.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 import __spark_entry__ as entry
-from akka_stream_contrib_spark.plans import count_exchanges
+from akka_stream_contrib_spark.plans import formatted_plan, plan_census
 
 SF = "/root/testdata/sf0.001"
+
+with open(os.path.join(os.path.dirname(__file__), "plan_census.json")) as f:
+    CENSUS = json.load(f)
 
 # query -> max shuffle exchanges (audited 2026-08-13, spark 4.1, AQE on,
 # 64 MB broadcast threshold; sf0.001 statistics)
@@ -620,11 +630,33 @@ def test_budget_covers_every_query():
     assert not missing, f"new queries need a shuffle budget: {missing}"
 
 
+def test_census_covers_every_query():
+    missing = sorted(set(entry.queries()) - set(CENSUS))
+    assert not missing, (f"new queries need a pinned plan census "
+                         f"(python tools/plan_census.py): {missing}")
+
+
+def _above_ceiling(got: dict, pinned: dict) -> dict:
+    """Census lenses (other than exchanges) above their pinned ceiling, as
+    lens -> (got, ceiling); a table or key set absent from the pin is 0."""
+    out = {}
+    for lens, n in got.items():
+        if lens == "exchanges":
+            continue
+        if isinstance(n, dict):
+            cap = pinned.get(lens, {})
+            out.update({f"{lens}[{k}]": (v, cap.get(k, 0))
+                        for k, v in n.items() if v > cap.get(k, 0)})
+        elif n > pinned.get(lens, 0):
+            out[lens] = (n, pinned.get(lens, 0))
+    return out
+
+
 def test_no_query_exceeds_its_shuffle_budget(spark):
     from akka_stream_contrib_spark.util import drop_stale_caches
 
     qs = entry.queries()
-    over = {}
+    over, census_over = {}, {}
     for name, fn in qs.items():
         if name not in BUDGET:
             continue
@@ -635,7 +667,12 @@ def test_no_query_exceeds_its_shuffle_budget(spark):
         # rotation reordered queries(): hits_scores printed 19 exchanges
         # because the graph queries before it left shared edge caches)
         drop_stale_caches()
-        n = count_exchanges(fn(spark, SF))
-        if n > BUDGET[name]:
-            over[name] = (n, BUDGET[name])
-    assert not over, f"shuffle budget exceeded (got, budget): {over}"
+        got = plan_census(formatted_plan(fn(spark, SF)))
+        if got["exchanges"] > BUDGET[name]:
+            over[name] = (got["exchanges"], BUDGET[name])
+        grown = _above_ceiling(got, CENSUS.get(name, {}))
+        if grown:
+            census_over[name] = grown
+    assert not over and not census_over, (
+        f"shuffle budget exceeded (got, budget): {over}; plan census above "
+        f"its pinned ceiling (got, ceiling): {census_over}")

@@ -4,21 +4,14 @@ tests/test_plans.py + tests/test_plan_budget.py enforce (pushdown, broadcast
 dimensions, whole-stage codegen spans, top-k without global sort, bounded
 exchange counts).
 
-Usage: python tools/dump_plans.py   (writes /root/repo/PLANS.md)
+Usage: python tools/dump_plans.py   (writes PLANS.md at the repo root)
 """
 
 from __future__ import annotations
 
-import io
-import sys
-from contextlib import redirect_stdout
+import os
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
-from akka_stream_contrib_spark import get_spark  # noqa: E402
-
-SF = "/root/testdata/sf0.001"
+from plan_census import ROOT, explain_each
 
 SHOWCASE = {
     "q3_shipping_priority": "TPC-H join+agg: both dimensions broadcast, the "
@@ -203,7 +196,7 @@ SHOWCASE = {
 
 
 def main() -> None:
-    spark = get_spark()
+    plans = dict(explain_each(SHOWCASE))
     out = [
         "# PLANS — formatted physical plans (generated by tools/dump_plans.py "
         f"at sf0.001)",
@@ -213,13 +206,9 @@ def main() -> None:
         "test_plan_budget.py); this file is the human-readable evidence.",
     ]
     for name, why in SHOWCASE.items():
-        df = entry.queries()[name](spark, SF)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue().rstrip()
-        out += ["", f"## {name}", "", f"*{why}*", "", "```", plan, "```"]
-    with open("/root/repo/PLANS.md", "w") as f:
+        out += ["", f"## {name}", "", f"*{why}*", "", "```",
+                plans[name].rstrip(), "```"]
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md ({sum(len(l) for l in out)} chars)")
 

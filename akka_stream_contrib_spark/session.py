@@ -14,6 +14,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: the directory that holds this package, for the Python workers' path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "akka-stream-contrib-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -59,5 +62,14 @@ def get_spark(app_name: str = "akka-stream-contrib-spark",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # every Python task re-read pyspark.zip's central directory through
+        # importlib.invalidate_caches(): ~0.2 s per task, the floor of every
+        # pandas-UDF stage and of each stateful micro-batch. The daemon
+        # keeps an unchanged archive's cached directory (see pydaemon.py).
+        # A worker's path is its cwd plus Spark's zips, not this process's
+        # sys.path: without the package's parent on PYTHONPATH, a session
+        # started from another directory fails every Python stage
+        .config("spark.python.daemon.module", "akka_stream_contrib_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from typing import Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -29,6 +30,8 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType, BooleanType, ArrayType,
     DoubleType, TimestampType,
 )
+
+from akka_stream_contrib_spark.util import epoch_micros
 
 
 def token_throttle_stream(unioned: DataFrame, key_col: str = "key") -> DataFrame:
@@ -161,8 +164,8 @@ def accumulate_while_unchanged_stream(elements: DataFrame,
         rows = pd.concat(chunks) if chunks else pd.DataFrame()
         if len(rows):
             rows = rows.sort_values("seq")
-            for _, r in rows.iterrows():
-                p, s = str(r["prop"]), int(r["seq"])
+            for p, s in zip(rows["prop"], rows["seq"]):
+                p, s = str(p), int(s)
                 if cur is None:
                     cur = (p, 1, s)
                 elif cur[0] == p:
@@ -184,6 +187,34 @@ def accumulate_while_unchanged_stream(elements: DataFrame,
     )
 
 
+def _number_sessions(ts: np.ndarray, eid: np.ndarray, state: tuple,
+                    gap_us: int):
+    """One key's micro-batch of ``sessionize_stream``. ``ts`` (epoch
+    micros) and ``eid`` are the batch's events in any order; ``state`` is
+    ``(last_us, n_sessions, pos)``, with ``last_us`` None for a new key.
+    Events are numbered in (ts, event_id) order — ties go by event_id, the
+    batch form's order, not by shuffle arrival — and the function returns
+    ``(event_id, session_id, session_pos, new_state)`` in that order."""
+    last_us, n_sessions, pos = state
+    order = np.lexsort((eid, ts))
+    ts, eid = ts[order], eid[order]
+    # the gap test runs against the non-rewinding clock max(last_us,
+    # previous ts): a CROSS-BATCH late event joins the open session
+    # without moving the clock back, or the next on-time event would
+    # look past-gap and split a continuous session in two
+    clock = np.concatenate(([ts[0] if last_us is None else last_us], ts[:-1]))
+    if last_us is not None:
+        clock = np.maximum(clock, last_us)
+    new = ts - clock > gap_us
+    new[0] |= last_us is None
+    idx = np.arange(len(ts))
+    start = np.maximum.accumulate(np.where(new, idx, -1))
+    session_pos = idx + 1 + np.where(start < 0, pos, -start)
+    session_id = n_sessions + np.cumsum(new)
+    return eid, session_id, session_pos, (
+        int(max(ts[-1], clock[-1])), int(session_id[-1]), int(session_pos[-1]))
+
+
 def sessionize_stream(elements: DataFrame, gap_s: int,
                       key_col: str = "user_id") -> DataFrame:
     """Streaming per-event session assignment: the cross-batch form of
@@ -193,7 +224,7 @@ def sessionize_stream(elements: DataFrame, gap_s: int,
     session spanning many batches keeps ONE id — the property the batch
     window form cannot give on an unbounded stream. State is three scalars
     per key (RocksDB-friendly); rows within a batch are processed in
-    event-time order per key.
+    (ts, event_id) order per key, so a replay numbers ties the same way.
 
     Input needs ``(key_col, ts timestamp, event_id long)``; emits
     ``(key, event_id, session_id, session_pos)`` in append mode.
@@ -211,35 +242,24 @@ def sessionize_stream(elements: DataFrame, gap_s: int,
     gap_us = gap_s * 1_000_000
 
     def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        last_us, n_sessions, pos = (
-            state.get if state.exists else (None, 0, 0))
-        rows = []
-        # concat ALL Arrow chunks before the single sort (the
-        # accumulate_while_unchanged_stream pattern): a >maxRecordsPerBatch
-        # group arrives as several chunks, and chunk-local sorts would let
-        # last_us move backwards across the boundary — wrong gap tests,
-        # wrong session ids
+        # concat ALL Arrow chunks before _number_sessions' one sort: a
+        # >maxRecordsPerBatch group arrives as several chunks, and
+        # chunk-local sorts would let the clock move backwards across the
+        # boundary — wrong gap tests, wrong session ids
         chunks = [c for c in pdfs if len(c)]
-        batch = (pd.concat(chunks).sort_values("ts")
-                 if chunks else pd.DataFrame(columns=["ts", "event_id"]))
-        for ts, eid in zip(batch["ts"], batch["event_id"]):
-            us = int(ts.value // 1_000)  # pandas ns -> micros
-            if last_us is None or us - last_us > gap_us:
-                n_sessions, pos = n_sessions + 1, 1
-                last_us = us
-            else:
-                # a CROSS-BATCH late event (us < last_us) joins the open
-                # session but must not move the clock backwards — a
-                # rewound last_us would make the next on-time event look
-                # past-gap and split a continuous session in two
-                pos += 1
-                last_us = max(last_us, us)
-            rows.append((key[0], int(eid), n_sessions, pos))
-        state.update((last_us, n_sessions, pos))
-        yield pd.DataFrame(rows, columns=["key", "event_id", "session_id",
-                                          "session_pos"])
+        if not chunks:
+            return
+        eid, session_id, session_pos, after = _number_sessions(
+            np.concatenate([c["_ts_us"].to_numpy(np.int64) for c in chunks]),
+            np.concatenate([c["event_id"].to_numpy(np.int64) for c in chunks]),
+            state.get if state.exists else (None, 0, 0), gap_us)
+        state.update(after)
+        yield pd.DataFrame({"key": key[0], "event_id": eid,
+                            "session_id": session_id,
+                            "session_pos": session_pos})
 
     return (elements
+            .select(key_col, epoch_micros("ts").alias("_ts_us"), "event_id")
             .groupBy(key_col)
             .applyInPandasWithState(_fn, out_schema, state_schema, "append",
                                     GroupStateTimeout.NoTimeout))

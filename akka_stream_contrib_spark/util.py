@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -52,6 +53,17 @@ _PIPELINE_CACHES: list = []
 _RETAIN_CACHES = False
 
 
+def _unpersist(df) -> None:
+    """``df.unpersist()``, except that a frame whose SparkContext was
+    stopped (which dropped every cache with it) is already released; any
+    other failure propagates."""
+    try:
+        df.unpersist()
+    except Py4JError:
+        if df.sparkSession.sparkContext._jsc is not None:
+            raise
+
+
 def drop_stale_caches() -> None:
     """Unpersist DataFrames cached by PREVIOUS pipeline invocations.
 
@@ -63,10 +75,7 @@ def drop_stale_caches() -> None:
     if _RETAIN_CACHES:
         return
     while _PIPELINE_CACHES:
-        try:
-            _PIPELINE_CACHES.pop().unpersist()
-        except Exception:
-            pass
+        _unpersist(_PIPELINE_CACHES.pop())
 
 
 from contextlib import contextmanager  # noqa: E402
@@ -106,10 +115,7 @@ def release_pipeline_cache(df) -> None:
     at 100 TB). Only call once every consumer of the frame's CONTENT has
     materialized — a recompute after release walks the frame's full
     lineage. No-op for frames not (or no longer) registered."""
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+    _unpersist(df)
     try:
         _PIPELINE_CACHES.remove(df)
     except ValueError:

@@ -680,6 +680,78 @@ def test_sessionize_stream_restart_under_load_and_replay(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() == n_before
 
 
+def test_sessionize_stream_numbering_matches_the_loop():
+    """The vectorized per-key body against the per-event loop it replaced,
+    over random micro-batches that carry state, tie on ts and bring
+    cross-batch late events."""
+    import numpy as np
+
+    from akka_stream_contrib_spark.streaming.stateful import _number_sessions
+
+    def loop(ts, eid, state, gap_us):
+        last_us, n_sessions, pos = state
+        out = []
+        for us, e in sorted(zip(ts.tolist(), eid.tolist())):
+            if last_us is None or us - last_us > gap_us:
+                n_sessions, pos, last_us = n_sessions + 1, 1, us
+            else:
+                pos, last_us = pos + 1, max(last_us, us)
+            out.append((e, n_sessions, pos))
+        return out, (last_us, n_sessions, pos)
+
+    rng = np.random.default_rng(7)
+    gap_us = 60_000_000
+    for _ in range(200):
+        got_state = want_state = (None, 0, 0)
+        base, next_eid = 0, 0
+        for _ in range(int(rng.integers(1, 5))):
+            n = int(rng.integers(1, 12))
+            # gaps straddle the session gap; a few land before the clock
+            ts = base + np.cumsum(rng.choice(
+                [0, 1_000_000, 59_000_000, 61_000_000, 600_000_000], n))
+            ts = ts - rng.choice([0, 0, 0, 120_000_000], n)
+            eid = rng.permutation(np.arange(next_eid, next_eid + n))
+            base, next_eid = int(ts.max()), next_eid + n
+            want, want_state = loop(ts, eid, want_state, gap_us)
+            e, sid, spos, got_state = _number_sessions(
+                ts.astype(np.int64), eid.astype(np.int64), got_state, gap_us)
+            assert list(zip(e.tolist(), sid.tolist(), spos.tolist())) == want
+            assert got_state == want_state
+
+
+def test_sessionize_stream_orders_tied_ts_by_event_id(spark, tmp_path):
+    """Events tied on ts are numbered in event_id order, as the batch form
+    numbers them, whatever order they land in: the rows arrive in
+    descending event_id, so an arrival-order tie break would reverse every
+    tied pair's session_pos and differ on a replay with another layout."""
+    from akka_stream_contrib_spark.operators import sessionize
+    from akka_stream_contrib_spark.streaming import sessionize_stream
+    src = tmp_path / "tie_src"
+    src.mkdir()
+    out_dir, ck = str(tmp_path / "tie_out"), str(tmp_path / "tie_ck")
+    # ts by event_id 1..6: two tied runs, then a new session
+    stamps = ["10:00:00"] * 3 + ["10:00:30"] * 2 + ["12:00:00"]
+    rows = [{"user_id": 1, "event_id": eid,
+             "ts": f"2024-01-01 {stamps[eid - 1]}"} for eid in range(6, 0, -1)]
+    _feed_json(src, "b1.json", rows)
+    schema = "user_id long, event_id long, ts string"
+    stream = (spark.readStream.schema(schema).json(str(src))
+              .withColumn("ts", F.col("ts").cast("timestamp")))
+    q = (sessionize_stream(stream, gap_s=60).writeStream.format("parquet")
+         .option("path", out_dir).option("checkpointLocation", ck)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = {r.event_id: (r.session_id, r.session_pos)
+           for r in spark.read.parquet(out_dir).collect()}
+    want = {r.event_id: (r.session_id, r.session_pos) for r in
+            spark.read.schema(schema).json(str(src))
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .transform(sessionize("user_id", "ts", "event_id", gap_s=60))
+            .collect()}
+    assert got == want
+    assert got[1] == (1, 1) and got[6] == (2, 1)
+
+
 def test_heavy_hitters_stream_restart_under_load(spark, tmp_path):
     """Two files pending at restart (forced into separate micro-batches),
     then an idle restart: counters accumulate across every boundary, the

@@ -226,6 +226,39 @@ def test_retain_pipeline_caches_defers_drop(spark):
     assert not util._PIPELINE_CACHES
 
 
+def test_cache_release_swallows_only_a_stopped_context(spark):
+    """Releasing a cache whose SparkContext was stopped is a no-op (the
+    stop dropped it); any other unpersist failure propagates from both
+    release paths instead of leaving the cache pinned in silence."""
+    from types import SimpleNamespace
+
+    from py4j.protocol import Py4JError
+
+    from akka_stream_contrib_spark import util
+
+    class Frame:
+        def __init__(self, session, error):
+            self.sparkSession, self.error = session, error
+
+        def unpersist(self):
+            raise self.error
+
+    stopped = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
+    try:
+        util._PIPELINE_CACHES.append(Frame(stopped, Py4JError("stopped")))
+        util.drop_stale_caches()
+        util.release_pipeline_cache(Frame(stopped, Py4JError("stopped")))
+        assert not util._PIPELINE_CACHES
+
+        util._PIPELINE_CACHES.append(Frame(spark, Py4JError("boom")))
+        with pytest.raises(Py4JError, match="boom"):
+            util.drop_stale_caches()
+        with pytest.raises(RuntimeError, match="boom"):
+            util.release_pipeline_cache(Frame(spark, RuntimeError("boom")))
+    finally:
+        util._PIPELINE_CACHES.clear()
+
+
 def test_no_unregistered_caches_in_package():
     """Grep gate (r11 cache hygiene): raw ``.cache()`` is banned in the
     package and ``.persist()`` may appear only inside util.pipeline_cache

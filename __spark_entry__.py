@@ -2336,8 +2336,7 @@ def q_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_all_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval family, corpus form: top-4 neighbors (self included — rank 1
     at cos 1.0 — keeping the semantics trivially oracle-replayable) for EVERY
-    vector via the same broadcast-GEMM kernel. The oracle-checked upgrade of
-    the rows-only ``ann_topk_all`` path."""
+    vector via the same broadcast-GEMM kernel."""
     from akka_stream_contrib_spark.functions import knn_join
     emb = tables.load(spark, "embeddings", sf_dir)
     return knn_join(emb, emb, k=4)

@@ -31,15 +31,6 @@ def _dist2(vec_col: str, centroid: list[float]):
         F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _assign(df: DataFrame, vec_col: str, cents: list[list[float]]):
-    """Nearest-centroid id (ties → lowest id) as one map-side expression."""
-    dists = F.array(*[_dist2(vec_col, c) for c in cents])
-    return df.withColumn(
-        "_d", dists).withColumn(
-        "cluster", (F.array_position(F.col("_d"), F.array_min("_d")) - 1
-                    ).cast("int")).drop("_d")
-
-
 def kmeans_assign(df: DataFrame, k: int = 8, iterations: int = 5,
                   id_col: str = "vec_id", vec_col: str = "embedding",
                   portable_round: int | None = None,
@@ -76,6 +67,8 @@ def kmeans_assign(df: DataFrame, k: int = 8, iterations: int = 5,
                          F.lit(0.0).alias("dist")).limit(0)
     import numpy as np
 
+    from akka_stream_contrib_spark.functions.similarity import (_lloyd_sums,
+                                                                _recenter)
     cents_np = np.array([[float(x) for x in r[vec_col]] for r in seed_rows])
     spark = df.sparkSession
     # Iteration assignments run as ONE Arrow pass with broadcast centroids
@@ -96,12 +89,7 @@ def kmeans_assign(df: DataFrame, k: int = 8, iterations: int = 5,
                 if len(pdfb) == 0:
                     continue
                 X = np.stack(pdfb[vec_col].to_numpy()).astype(np.float64)
-                d2 = ((X * X).sum(1, keepdims=True) - 2.0 * (X @ c.T)
-                      + (c * c).sum(1))
-                a = np.argmin(d2, axis=1)
-                n = np.bincount(a, minlength=len(c))
-                sums = np.zeros_like(c)
-                np.add.at(sums, a, X)
+                n, sums = _lloyd_sums(X, c)
                 nz = np.nonzero(n)[0]
                 yield pd.DataFrame({"cluster": nz.astype("int32"),
                                     "n": n[nz],
@@ -110,13 +98,12 @@ def kmeans_assign(df: DataFrame, k: int = 8, iterations: int = 5,
         parts = base.mapInPandas(
             _partials, schema="cluster int, n long, sums array<double>"
         ).collect()
-        tot_n = np.zeros(len(cents_np))
+        tot_n = np.zeros(len(cents_np), dtype=np.int64)
         tot_s = np.zeros_like(cents_np)
         for r in parts:
             tot_n[r["cluster"]] += r["n"]
             tot_s[r["cluster"]] += np.asarray(r["sums"])
-        upd = tot_n > 0  # clusters that lost all members keep their centroid
-        cents_np[upd] = tot_s[upd] / tot_n[upd, None]
+        _recenter(cents_np, tot_n, tot_s)
         if portable_round is not None:
             # +0.0 normalizes any -0.0 so the literal matches SQL round()
             cents_np = np.round(cents_np, portable_round) + 0.0

@@ -27,9 +27,7 @@ MINHASH_P = 8191  # 2^13-1, prime modulus for the affine hash family
 # (util.pipeline_cache): the next pipeline's entry point unpersists them,
 # bounding executor storage across a long sequential gate/bench session
 from akka_stream_contrib_spark.util import (  # noqa: E402
-    _PIPELINE_CACHES as _LAST_PERSISTED)
-from akka_stream_contrib_spark.util import (  # noqa: E402
-    drop_stale_caches as _drop_stale_caches)
+    drop_stale_caches, pipeline_cache)
 
 
 def dedup_exact(id_col: str = "doc_id", text_col: str = "text") -> Callable[[DataFrame], DataFrame]:
@@ -308,24 +306,20 @@ def minhash_incremental_dedup(new_df: DataFrame, index: DataFrame,
 
 
 def minhash_doc_aggregate(df: DataFrame, k: int, num_hashes: int,
-                          id_col: str, text_col: str,
-                          persist: bool = True) -> DataFrame:
+                          id_col: str, text_col: str) -> DataFrame:
     """Per-doc minhash aggregate (signatures + shingle-set size + shingle
     array in ONE pass, single doc_id shuffle) — ONE definition shared by
     :func:`minhash_lsh_dedup` and :func:`near_dup_decontaminate`, the
     :func:`minhash_aggs` discipline: the aggregate shape can never
     silently diverge between the within-corpus and cross-split paths."""
     sh = shingles(df, k=k, id_col=id_col, text_col=text_col)
-    agg = (sh.withColumn("tid", token_id(F.col("shingle")))
-           .groupBy("doc_id")
-           .agg(*minhash_aggs(num_hashes),
-                F.count(F.lit(1)).alias("n"),
-                # shingles are distinct per doc (see shingles())
-                F.collect_list("shingle").alias("shs")))
-    if persist:
-        agg = agg.persist()
-        _LAST_PERSISTED.append(agg)
-    return agg
+    return pipeline_cache(
+        sh.withColumn("tid", token_id(F.col("shingle")))
+        .groupBy("doc_id")
+        .agg(*minhash_aggs(num_hashes),
+             F.count(F.lit(1)).alias("n"),
+             # shingles are distinct per doc (see shingles())
+             F.collect_list("shingle").alias("shs")))
 
 
 def minhash_lsh_dedup(
@@ -336,7 +330,6 @@ def minhash_lsh_dedup(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH candidates → exact
     Jaccard verification on candidates only. Returns (doc_a, doc_b, jaccard)
@@ -347,16 +340,15 @@ def minhash_lsh_dedup(
     then join against that compact per-doc table and verification is an
     ``array_intersect`` — the exploded shingle rows are never revisited.
 
-    ``persist_intermediate`` caches the per-doc aggregate, which three
-    consumers share (band entries, a-side, b-side of the candidate join).
-    The cache is dropped lazily on the NEXT call (module-level registry) so
-    repeated pipeline invocations don't accumulate executor storage."""
+    The per-doc aggregate is pipeline-cached: three consumers share it
+    (band entries, a-side, b-side of the candidate join). The cache is
+    dropped lazily on the NEXT call (package-level registry) so repeated
+    pipeline invocations don't accumulate executor storage."""
     if bands < 1 or num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    _drop_stale_caches()
-    per_doc = minhash_doc_aggregate(df, k, num_hashes, id_col, text_col,
-                                    persist=persist_intermediate)
+    drop_stale_caches()
+    per_doc = minhash_doc_aggregate(df, k, num_hashes, id_col, text_col)
     cand = lsh_candidate_pairs(per_doc, bands=bands, rows_per_band=num_hashes // bands)
     docs_a = per_doc.select(F.col("doc_id").alias("_ida"), F.col("n").alias("na"),
                             F.col("shs").alias("sha"))
@@ -414,9 +406,9 @@ def ngram_jaccard_dedup(
     O(sum df²) with df ≤ max_doc_freq — never all-pairs. Returns
     (doc_a, doc_b, jaccard ≥ threshold).
     """
-    _drop_stale_caches()
-    grams = char_ngrams(df, n=n, id_col=id_col, text_col=text_col).persist()
-    _LAST_PERSISTED.append(grams)
+    drop_stale_caches()
+    grams = pipeline_cache(
+        char_ngrams(df, n=n, id_col=id_col, text_col=text_col))
     # per-doc set sizes from the PERSISTED gram table (grams are distinct
     # per doc, so count == set size) — one tiny cache-fed aggregation
     # instead of re-running the O(len·n) regexp extraction over the
@@ -497,9 +489,9 @@ def ngram_containment(
     and ``direction`` naming the contained side ('a_in_b' on ties — the
     deterministic pick).
     """
-    _drop_stale_caches()
-    grams = char_ngrams(df, n=n, id_col=id_col, text_col=text_col).persist()
-    _LAST_PERSISTED.append(grams)
+    drop_stale_caches()
+    grams = pipeline_cache(
+        char_ngrams(df, n=n, id_col=id_col, text_col=text_col))
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     common = (
         grams.groupBy("ngram").agg(F.count(F.lit(1)).alias("_df"))
@@ -931,8 +923,6 @@ def novelty_score(n: int = 3, id_col: str = "doc_id", text_col: str = "text"
     """
 
     def _apply(df: DataFrame) -> DataFrame:
-        from akka_stream_contrib_spark.util import pipeline_cache
-
         toks = df.select(F.col(id_col).alias("doc_id"),
                          F.split(F.lower(F.col(text_col)), " ").alias("_t"))
         cnt = F.size("_t") - (n - 1)
@@ -1045,7 +1035,7 @@ def near_dup_decontaminate(train: DataFrame, eval_df: DataFrame, k: int = 3,
     if bands < 1 or num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    _drop_stale_caches()
+    drop_stale_caches()
     rows_per_band = num_hashes // bands
     tr = minhash_doc_aggregate(train, k, num_hashes, id_col, text_col)
     ev = minhash_doc_aggregate(eval_df, k, num_hashes, id_col, text_col)

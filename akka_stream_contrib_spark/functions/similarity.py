@@ -5,10 +5,10 @@
   no shuffle of the vectors, the right baseline at any scale.
 - ``near_dup_pairs``: exact all-pairs cosine above a threshold (verification
   tool; quadratic — use on candidate sets, not raw corpora).
-- ``ann_topk_all``: the scale path — blocked numpy matmul inside mapInPandas
-  with a broadcast query matrix: top-k neighbors for *every* vector without a
-  quadratic shuffle. Arrow-batched, vectorized, embarrassingly parallel over
-  partitions.
+- ``knn_join`` / ``hard_negatives``: the scale path — blocked numpy matmul
+  inside mapInPandas against a broadcast corpus matrix: top-k neighbors for
+  *every* query vector without a quadratic shuffle. Arrow-batched,
+  vectorized, embarrassingly parallel over partitions.
 """
 
 from __future__ import annotations
@@ -57,7 +57,7 @@ def near_dup_pairs(df: DataFrame, threshold: float,
                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact pairs with cosine ≥ threshold via normalized self-join.
     Quadratic — intended for candidate verification / small-N; the scale path
-    is ``ann_topk_all`` or LSH bucketing first.
+    is ``near_dup_pairs_blocked`` or LSH bucketing first.
 
     Zero-norm vectors are DROPPED (cosine is undefined for them); without the
     filter Spark's NaN ordering (NaN > any double) would silently emit every
@@ -233,6 +233,36 @@ def _sq_dists(v: np.ndarray, cs: np.ndarray) -> np.ndarray:
             + (cs * cs).sum(axis=1))
 
 
+def _unit_rows(vecs) -> np.ndarray:
+    """A column of equal-length vectors as an L2-row-normalized float64
+    (n, d) matrix."""
+    m = np.stack(vecs).astype(np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    return m
+
+
+def _lloyd_sums(X: np.ndarray, cents: np.ndarray):
+    """The assignment half of one Lloyd round: each row of ``X`` joins its
+    nearest centroid (ties → the lowest index, argmin's first minimum).
+    Returns per-centroid member counts ``n`` and member vector sums
+    ``sums``; rows are added in row order, so the sum bits equal a
+    per-centroid ``members.sum(axis=0)``. Partial results over row blocks
+    add up to the whole-``X`` result."""
+    a = np.argmin(_sq_dists(X, cents), axis=1)
+    n = np.bincount(a, minlength=len(cents))
+    sums = np.zeros_like(cents)
+    np.add.at(sums, a, X)
+    return n, sums
+
+
+def _recenter(cents: np.ndarray, n: np.ndarray, sums: np.ndarray) -> None:
+    """The update half of one Lloyd round, in place: every centroid with
+    members moves to their mean; a centroid that lost all its members keeps
+    its position."""
+    nz = n > 0
+    cents[nz] = sums[nz] / n[nz, None]
+
+
 def _plane(p: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane p: exact integer formula then
     one double division — reproducible in any engine (no RNG)."""
@@ -327,8 +357,7 @@ def ivf_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
         for pdfb in batches:
             if len(pdfb) == 0:
                 continue
-            v = np.stack(pdfb[vec_col].to_numpy()).astype(np.float64)
-            v /= np.linalg.norm(v, axis=1, keepdims=True)
+            v = _unit_rows(pdfb[vec_col].to_numpy())
             cell = np.argmin(_sq_dists(v, cs), axis=1)
             mask = np.isin(cell, list(probed))
             if not mask.any():
@@ -380,6 +409,46 @@ def _topk_idx_rounded(sims: np.ndarray, kk: int) -> np.ndarray:
     return np.take_along_axis(part, order, axis=1)
 
 
+def _unit_corpus(pdf: pd.DataFrame, id_col: str, vec_col: str, *extra):
+    """A collected broadcast corpus as arrays sorted by id ONCE: the ids,
+    each ``extra`` column, then the L2-normalized float64 vector matrix,
+    all in that order. Id order is what makes ``_gemm_topk``'s selection
+    the (sim DESC, id ASC) total order. An empty corpus gives empty arrays
+    (and a (0, 1) matrix) instead of raising in ``np.stack``, so
+    compositions (margin_mine) run over empty slices."""
+    order = np.argsort(pdf[id_col].to_numpy())
+    cols = [pdf[c].to_numpy()[order] for c in (id_col, *extra)]
+    mat = (_unit_rows(pdf[vec_col].to_numpy()[order]) if len(pdf)
+           else np.empty((0, 1)))
+    return (*cols, mat)
+
+
+def _gemm_topk(q: np.ndarray, qids: np.ndarray, corpus_m: np.ndarray,
+               corpus_ids: np.ndarray, kk: int) -> pd.DataFrame:
+    """Top-``kk`` corpus rows per unit query row, ranked by the 6-dp
+    rounded cosine with corpus-position (= id, see ``_unit_corpus``)
+    tie-break: one ``(query_id, neighbor_id, rank, cos_sim)`` frame.
+
+    Query rows stream through the GEMM in ~2 MB sims chunks: a whole-batch
+    (rows × corpus) sims matrix is a fresh hundreds-of-MB allocation whose
+    first-touch page faults dominate the arithmetic (the multimodal.py
+    finding); small chunks keep every temporary on reused heap pages.
+    Chunking the M dimension never changes an output element — each
+    cos_sim is the same k-length dot product either way."""
+    chunk = max(1, (2 << 20) // (8 * len(corpus_ids)))
+    outs = []
+    for s in range(0, len(q), chunk):
+        sims = (q[s:s + chunk] @ corpus_m.T).round(6)
+        idx = _topk_idx_rounded(sims, kk)
+        outs.append(pd.DataFrame({
+            "query_id": np.repeat(qids[s:s + chunk], kk),
+            "neighbor_id": corpus_ids[idx].ravel(),
+            "rank": np.tile(np.arange(1, kk + 1), sims.shape[0]),
+            "cos_sim": np.take_along_axis(sims, idx, axis=1).ravel(),
+        }))
+    return pd.concat(outs, ignore_index=True)
+
+
 def _bounded_index_pdf(df: DataFrame, cols: list, budget_rows: int,
                        what: str) -> pd.DataFrame:
     """Collect an index side to the driver ONLY if it fits the budget.
@@ -397,66 +466,6 @@ def _bounded_index_pdf(df: DataFrame, cols: list, budget_rows: int,
             "bucketing (ann_lsh_topk) — the corpus must not be collected "
             "to the driver at this size")
     return pdf
-
-
-def ann_topk_all(df: DataFrame, k: int = 10, id_col: str = "vec_id",
-                 vec_col: str = "embedding", block: int = 4096,
-                 broadcast_budget_rows: int = BROADCAST_BUDGET_ROWS) -> DataFrame:
-    """Approximate-free brute-force top-k for EVERY vector, the distributed
-    way: broadcast the (normalized) corpus matrix, stream partitions through
-    numpy GEMM blocks. One pass over the data, no pairwise shuffle.
-
-    The corpus side is collected ONLY within ``broadcast_budget_rows``
-    (bounded transfer, hard error beyond it); at 100 TB use
-    :func:`ann_topk_all_ivf` — same GEMM kernel, centroid-pruned candidate
-    join instead of a driver collect.
-    """
-    spark = df.sparkSession
-    pdf = _bounded_index_pdf(df, [id_col, vec_col], broadcast_budget_rows,
-                             "ann_topk_all")
-    ids = pdf[id_col].to_numpy()
-    mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-
-    kk = min(k, max(len(ids) - 1, 0))  # self is always masked out
-
-    def _topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        corpus = b_mat.value
-        corpus_ids = b_ids.value
-        # cap the block so the (block × N) sims temporary stays ~2 MB:
-        # fresh tens-of-MB allocations are first-touch-fault-bound on this
-        # host (the multimodal.py finding); small blocks reuse heap pages
-        block_eff = max(1, min(block, (2 << 20) // (8 * max(len(corpus_ids),
-                                                            1))))
-        for pdfb in batches:
-            if len(pdfb) == 0:
-                continue
-            q = np.stack(pdfb[vec_col].to_numpy()).astype(np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            qids = pdfb[id_col].to_numpy()
-            for s in range(0, len(q), block_eff):
-                qb = q[s:s + block_eff]
-                sims = qb @ corpus.T                       # (b, N)
-                qb_ids = qids[s:s + block_eff]
-                # mask self-matches, take top-k per row
-                for row_i in range(sims.shape[0]):
-                    sims[row_i, corpus_ids == qb_ids[row_i]] = -np.inf
-                if kk == 0:
-                    continue
-                idx = np.argpartition(-sims, min(kk, sims.shape[1] - 1),
-                                      axis=1)[:, :kk]
-                out_rows = {
-                    id_col: np.repeat(qb_ids, kk),
-                    "neighbor_id": corpus_ids[idx].ravel(),
-                    "cos_sim": np.take_along_axis(sims, idx, axis=1).ravel().round(6),
-                }
-                yield pd.DataFrame(out_rows)
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, vec_col).mapInPandas(
-        _topk, schema=f"{id_col} {id_type}, neighbor_id {id_type}, cos_sim double")
 
 
 def _train_centroids(df: DataFrame, nlist: int, iters: int,
@@ -483,11 +492,7 @@ def _train_centroids(df: DataFrame, nlist: int, iters: int,
     X /= nrm
     cents = X[:nlist].copy()
     for _ in range(iters):
-        assign = np.argmin(_sq_dists(X, cents), axis=1)
-        for c in range(nlist):
-            members = X[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
+        _recenter(cents, *_lloyd_sums(X, cents))
         cents /= np.linalg.norm(cents, axis=1, keepdims=True)
         if portable_round is not None:
             cents = np.round(cents, portable_round) + 0.0
@@ -525,8 +530,7 @@ def ann_topk_all_ivf(df: DataFrame, k: int = 3, nlist: int = 16,
         for pdfb in batches:
             if len(pdfb) == 0:
                 continue
-            v = np.stack(pdfb[vec_col].to_numpy()).astype(np.float64)
-            v /= np.linalg.norm(v, axis=1, keepdims=True)
+            v = _unit_rows(pdfb[vec_col].to_numpy())
             d2 = _sq_dists(v, cs)
             order = np.argsort(d2, axis=1, kind="stable")
             yield pd.DataFrame({
@@ -623,8 +627,7 @@ def ivf_write_index(df: DataFrame, path: str, nlist: int = 16,
         for pdfb in batches:
             if len(pdfb) == 0:
                 continue
-            v = np.stack(pdfb[vec_col].to_numpy()).astype(np.float64)
-            v /= np.linalg.norm(v, axis=1, keepdims=True)
+            v = _unit_rows(pdfb[vec_col].to_numpy())
             cell = np.argmin(_sq_dists(v, cs), axis=1)
             yield pd.DataFrame({id_col: pdfb[id_col], "nvec": list(v),
                                 "cell": cell.astype("int32")})
@@ -667,9 +670,9 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
              vec_col: str = "embedding",
              broadcast_budget_rows: int = BROADCAST_BUDGET_ROWS) -> DataFrame:
     """Batch kNN join: for every query vector the k nearest corpus vectors by
-    cosine, with a deterministic dense rank. The retrieval-workload shape of
-    :func:`ann_topk_all`: the (index) corpus side is broadcast as one
-    normalized numpy matrix, the query side streams through GEMM blocks.
+    cosine, with a deterministic dense rank. The (index) corpus side is
+    broadcast as one normalized numpy matrix, the query side streams
+    through GEMM blocks (``_gemm_topk``).
 
     Each query row lives in exactly one partition and sees the whole corpus,
     so per-row top-k is already global: ZERO shuffles, output partitioning
@@ -681,21 +684,7 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
     spark = queries.sparkSession
     pdf = _bounded_index_pdf(corpus, [corpus_id, vec_col],
                              broadcast_budget_rows, "knn_join")
-    # corpus sorted by id ONCE so a stable argsort on the negated rounded
-    # sims IS the (sim desc, id asc) total order — one vectorized argsort
-    # and ONE output frame per Arrow batch instead of a per-query-row
-    # lexsort + DataFrame (the hard_negatives kernel shape)
-    if len(pdf) == 0:
-        # an empty corpus has no neighbors: the empty result in the output
-        # schema (np.stack would raise) — lets compositions (margin_mine)
-        # run over empty slices instead of crashing at plan build
-        c_ids = np.empty(0, dtype=np.int64)
-        c_mat = np.empty((0, 1), dtype=np.float64)
-    else:
-        order0 = np.argsort(pdf[corpus_id].to_numpy())
-        c_ids = pdf[corpus_id].to_numpy()[order0]
-        c_mat = np.stack(pdf[vec_col].to_numpy()[order0]).astype(np.float64)
-        c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
+    c_ids, c_mat = _unit_corpus(pdf, corpus_id, vec_col)
     b_ids = spark.sparkContext.broadcast(c_ids)
     b_mat = spark.sparkContext.broadcast(c_mat)
     kk = min(k, len(c_ids))
@@ -706,28 +695,9 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
         for pdfb in batches:
             if len(pdfb) == 0 or kk == 0:
                 continue
-            q = np.stack(pdfb[vec_col].to_numpy()).astype(np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            qids = pdfb[query_id].to_numpy()
-            # query rows stream through the GEMM in ~2 MB sims chunks: a
-            # whole-batch (rows × corpus) sims matrix is a fresh hundreds-
-            # of-MB allocation whose first-touch page faults dominate the
-            # arithmetic on this host (the multimodal.py finding); small
-            # chunks keep every temporary on reused heap pages. Chunking
-            # the M dimension never changes an output element — each
-            # cos_sim is the same k-length dot product either way.
-            chunk = max(1, (2 << 20) // (8 * max(len(corpus_ids), 1)))
-            outs = []
-            for s in range(0, len(q), chunk):
-                sims = (q[s:s + chunk] @ corpus_m.T).round(6)
-                idx = _topk_idx_rounded(sims, kk)
-                outs.append(pd.DataFrame({
-                    "query_id": np.repeat(qids[s:s + chunk], kk),
-                    "neighbor_id": corpus_ids[idx].ravel(),
-                    "rank": np.tile(np.arange(1, kk + 1), sims.shape[0]),
-                    "cos_sim": np.take_along_axis(sims, idx, axis=1).ravel(),
-                }))
-            yield pd.concat(outs, ignore_index=True)
+            yield _gemm_topk(_unit_rows(pdfb[vec_col].to_numpy()),
+                             pdfb[query_id].to_numpy(), corpus_m,
+                             corpus_ids, kk)
 
     id_type = queries.schema[query_id].dataType.simpleString()
     nbr_type = corpus.schema[corpus_id].dataType.simpleString()
@@ -839,8 +809,7 @@ def pq_train_pdf(sample: pd.DataFrame, m: int = 8, ksub: int = 16,
     share it instead of paying a second Spark job."""
     if len(sample) == 0:
         return None
-    X = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    X = _unit_rows(sample[vec_col].to_numpy())
     d = X.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -853,17 +822,8 @@ def pq_train_pdf(sample: pd.DataFrame, m: int = 8, ksub: int = 16,
     for s in range(m):
         Xs = X[:, s * dsub:(s + 1) * dsub]
         cents = Xs[init_idx].copy()
-        xs2 = (Xs * Xs).sum(1, keepdims=True)
         for _ in range(iters):
-            # ||x-c||² via GEMM (4× the broadcasting form); scatter-mean via
-            # bincount instead of a per-cluster boolean-mask loop
-            d2 = xs2 - 2.0 * (Xs @ cents.T) + (cents * cents).sum(1)
-            assign = np.argmin(d2, axis=1)
-            n = np.bincount(assign, minlength=ksub)
-            sums = np.zeros_like(cents)
-            np.add.at(sums, assign, Xs)
-            nz = n > 0  # empty clusters keep their centroid
-            cents[nz] = sums[nz] / n[nz, None]
+            _recenter(cents, *_lloyd_sums(Xs, cents))
         books[s] = cents
     return books
 
@@ -888,15 +848,11 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray, id_col: str = "vec_id",
         for pdfb in batches:
             if len(pdfb) == 0:
                 continue
-            v = np.stack(pdfb[vec_col].to_numpy()).astype(np.float64)
-            v /= np.linalg.norm(v, axis=1, keepdims=True)
+            v = _unit_rows(pdfb[vec_col].to_numpy())
             codes = np.empty((len(v), m), dtype=np.int32)
             for s in range(m):
-                vs = v[:, s * dsub:(s + 1) * dsub]
-                d2 = ((vs * vs).sum(1, keepdims=True)
-                      - 2.0 * (vs @ books[s].T)
-                      + (books[s] * books[s]).sum(1))
-                codes[:, s] = np.argmin(d2, axis=1)
+                codes[:, s] = np.argmin(
+                    _sq_dists(v[:, s * dsub:(s + 1) * dsub], books[s]), axis=1)
             yield pd.DataFrame({id_col: pdfb[id_col], "codes": list(codes)})
 
     return df.select(id_col, vec_col).mapInPandas(
@@ -1000,57 +956,30 @@ def hard_negatives(queries: DataFrame, k: int = 5,
         # empty corpus → zero negatives (the reference's empty-upstream
         # contract: complete cleanly, emit nothing)
         return spark.createDataFrame([], out_schema)
-    # corpus arrays sorted by id ONCE: a stable argsort on the negated
-    # rounded sims then yields exactly the (sim DESC, id ASC) total order
-    # without any per-row lexsort
-    order0 = np.argsort(pdf[id_col].to_numpy())
-    c_ids = pdf[id_col].to_numpy()[order0]
-    c_labels = pdf[label_col].to_numpy()[order0]
-    c_mat = np.stack(pdf[vec_col].to_numpy()[order0]).astype(np.float64)
-    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-    b = spark.sparkContext.broadcast((c_ids, c_labels, c_mat))
+    b = spark.sparkContext.broadcast(
+        _unit_corpus(pdf, id_col, vec_col, label_col))
 
     def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         corpus_ids, corpus_labels, corpus_m = b.value
         for pdfb in batches:
             if len(pdfb) == 0:
                 continue
-            q = np.stack(pdfb[vec_col].to_numpy()).astype(np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
+            q = _unit_rows(pdfb[vec_col].to_numpy())
             qids = pdfb[id_col].to_numpy()
             qlabels = pdfb[label_col].to_numpy()
             # one vectorized top-k per LABEL GROUP (few labels, not per
-            # row): the label mask is shared by every query of that label.
-            # The masked corpus is gathered ONCE per label and the group's
-            # queries stream through the GEMM in ~2 MB sims chunks — a
-            # whole-batch (rows × corpus) sims matrix is a fresh
-            # hundreds-of-MB allocation whose first-touch page faults
-            # dominate the arithmetic on this host (the multimodal.py
-            # finding). Chunking M and masking the corpus BEFORE the GEMM
-            # never changes an output element: each cos_sim is the same
-            # k-length dot product of the same two vectors.
+            # row): the label mask is shared by every query of that label,
+            # and masking the corpus BEFORE the GEMM never changes an
+            # output element (the same dot product of the same two vectors)
             outs = []
             for lab in np.unique(qlabels):
                 qsel = qlabels == lab
                 mask = corpus_labels != lab
-                cand_ids = corpus_ids[mask]
-                kk = min(k, len(cand_ids))
+                kk = min(k, int(mask.sum()))
                 if kk == 0:
                     continue
-                cand_m = np.ascontiguousarray(corpus_m[mask])
-                qg = q[qsel]
-                gids = qids[qsel]
-                chunk = max(1, (2 << 20) // (8 * len(cand_ids)))
-                for s in range(0, len(qg), chunk):
-                    sub = (qg[s:s + chunk] @ cand_m.T).round(6)
-                    idx = _topk_idx_rounded(sub, kk)
-                    outs.append(pd.DataFrame({
-                        "query_id": np.repeat(gids[s:s + chunk], kk),
-                        "neighbor_id": cand_ids[idx].ravel(),
-                        "rank": np.tile(np.arange(1, kk + 1), sub.shape[0]),
-                        "cos_sim": np.take_along_axis(sub, idx,
-                                                      axis=1).ravel(),
-                    }))
+                outs.append(_gemm_topk(q[qsel], qids[qsel], corpus_m[mask],
+                                       corpus_ids[mask], kk))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 

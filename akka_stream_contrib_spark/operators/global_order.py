@@ -287,14 +287,6 @@ def global_running_sum(df: DataFrame, order_cols: str | Sequence[str],
     return global_running_agg(df, order_cols, value_col, out, fn="sum")
 
 
-def global_running_sums(df: DataFrame, order_cols: str | Sequence[str],
-                        value_cols: Sequence[str], outs: Sequence[str],
-                        ) -> DataFrame:
-    """Inclusive global prefix sums of SEVERAL columns sharing one range
-    pass — the multi-column form of `global_running_agg(fn="sum")`."""
-    return global_running_agg(df, order_cols, value_cols, outs, fn="sum")
-
-
 def global_lag(df: DataFrame, order_cols: str | Sequence[str],
                value: Column, out: str | Sequence[str],
                lags: int | Sequence[int] = 1,

@@ -25,11 +25,12 @@ SinglePartition aggregates). A node under an InMemoryRelation prints once
 per consumer of the cache — and under AQE once more as the cache's
 initial-plan copy, where an exchange gets a new id — while it executes AT
 MOST once (the cache build). It counts once per (outermost owning
-relation's arguments, node arguments), plan_id stripped. The relation's
-arguments carry its OUTPUT expr ids, identical across reprints of one
-cache and distinct between caches, so the reprints collapse while two
-caches whose build shuffles print the same partitioning still count
-separately. A node that prints no arguments (a scan, a join) keeps one id
+relation's arguments, node arguments), plan_id stripped; a node id
+printed under any InMemoryRelation is a cache-build node wherever else it
+is reprinted (see ``plan_nodes``). The relation's arguments carry its
+OUTPUT expr ids, identical across reprints of one cache and distinct
+between caches, so the reprints collapse while two caches whose build
+shuffles print the same partitioning still count separately. A node that prints no arguments (a scan, a join) keeps one id
 in every reprint, so it counts once per id. The walk covers every
 section: a shuffle inside a subquery is a real shuffle.
 """
@@ -78,14 +79,18 @@ LOW_CARD = frozenset({
 _NODE_LINE = re.compile(r"([A-Za-z][A-Za-z ]*?) \((\d+)\)\s*$")
 
 
-def plan_census(plan: str) -> dict:
-    """The lenses of the module docstring over one formatted plan:
-    ``scans`` and ``hot_hash`` map a table / key set to a count, the other
-    lenses are counts."""
+def plan_nodes(plan: str) -> list:
+    """Every node of a formatted plan's tree, once per node id, as
+    ``(name, node_id, owner_id)``: ``owner_id`` is the outermost
+    InMemoryRelation whose cache build the node belongs to, None for a
+    main-plan node. A node printed under any InMemoryRelation is a
+    cache-build node wherever else it is reprinted: Spark prints the final
+    and initial plans of an AdaptiveSparkPlan nested in a cache at the
+    outer plan's indentation, where the walk alone would lose the owner."""
     # tree walk: everything deeper than an InMemoryRelation line (until the
     # indentation returns) is that cache's build-plan rendering; a section
     # boundary ("===== Subqueries =====", "Subquery:N ...") resets the stack
-    names, main, owner, stack = {}, set(), {}, []
+    names, owner, stack = {}, {}, []
     for line in plan.splitlines():
         if line.startswith("=====") or line.lstrip().startswith("Subquery"):
             stack = []
@@ -100,10 +105,15 @@ def plan_census(plan: str) -> dict:
         names[node_id] = name
         if stack:
             owner[node_id] = stack[0][1]  # outermost owning relation
-        else:
-            main.add(node_id)
         if name == "InMemoryRelation":
             stack.append((indent, node_id))
+    return [(name, i, owner.get(i)) for i, name in names.items()]
+
+
+def plan_census(plan: str) -> dict:
+    """The lenses of the module docstring over one formatted plan:
+    ``scans`` and ``hot_hash`` map a table / key set to a count, the other
+    lenses are counts."""
     # details section: node id -> its block ("(N) Name" up to the next one)
     blocks, args = {}, {}
     for block in re.split(r"\n(?=\(\d+\) )", plan):
@@ -115,10 +125,10 @@ def plan_census(plan: str) -> dict:
         if a:
             args[m.group(1)] = re.sub(r"\[plan_id=\d+\]", "", a.group(1))
     # one representative node id per distinct node
-    distinct = {(names[i], i): i for i in main}
-    for i, rel in owner.items():
-        key = ((names[i], args.get(rel, rel), args[i]) if i in args
-               else (names[i], i))
+    distinct = {}
+    for name, i, rel in plan_nodes(plan):
+        key = ((name, args.get(rel, rel), args[i]) if rel and i in args
+               else (name, i))
         distinct[key] = i
     scans, hot_hash = {}, {}
     census = {"exchanges": 0, "scans": scans, "python_evals": 0,

@@ -100,10 +100,8 @@ def incremental_dedup_sink(path: str, id_col: str = "doc_id",
         fresh = dedup_incremental(batch_df, seen, id_col=id_col,
                                   text_col=text_col, hash_col=hash_col)
         fresh = fresh.localCheckpoint(eager=True)  # read index BEFORE writing it
-        (fresh.drop(hash_col).withColumn(BATCH_COL, F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(BATCH_COL).parquet(f"{path}/docs"))
+        idempotent_parquet_sink(f"{path}/docs")(fresh.drop(hash_col),
+                                                batch_id)
         fresh.select(hash_col).write.mode("append").parquet(f"{path}/index")
 
     return _write
@@ -215,11 +213,8 @@ def scd2_sink(path: str, key: str = "user_id", attr: str = "event_type",
                       "is_current",
                       F.col("is_current") & F.col("_close_at").isNull())
                   .drop("_close_at"))
-        out = closed.select(*cols).unionByName(fresh.select(*cols))
-        (out.withColumn(BATCH_COL, F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(BATCH_COL).parquet(path))
+        idempotent_parquet_sink(path)(
+            closed.select(*cols).unionByName(fresh.select(*cols)), batch_id)
 
     return _write
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from akka_stream_contrib_spark.functions.similarity import ann_lsh_topk, ann_topk_all
+from akka_stream_contrib_spark.functions.similarity import ann_lsh_topk
 from akka_stream_contrib_spark.operators import as_of_join
 
 

@@ -8,9 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from akka_stream_contrib_spark.functions import (
-    ann_topk_all,
     cosine_topk,
     dedup_exact,
+    knn_join,
     minhash_lsh_dedup,
     simhash,
 )
@@ -29,11 +29,12 @@ def vectors_df(spark, n=50, dim=8):
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
 
 
-def test_ann_topk_all_agrees_with_single_query_bruteforce(spark):
+def test_knn_join_self_agrees_with_single_query_bruteforce(spark):
     df = vectors_df(spark)
-    all_topk = ann_topk_all(df, k=5)
+    all_topk = knn_join(df, df, k=6).filter(
+        F.col("neighbor_id") != F.col("query_id"))
     mine = {r.neighbor_id: r.cos_sim for r in
-            all_topk.filter(F.col("vec_id") == 7).collect()}
+            all_topk.filter(F.col("query_id") == 7).collect()}
     qvec = df.filter(F.col("vec_id") == 7).head().embedding
     brute = {r.vec_id: r.cos_sim for r in
              cosine_topk(df.filter(F.col("vec_id") != 7), qvec, k=5).collect()}
@@ -683,6 +684,50 @@ def test_kmeans_assign_empty_and_validation(spark):
     assert kmeans_assign(empty, k=2, iterations=1).count() == 0
     with _pytest.raises(ValueError):
         kmeans_assign(empty, k=0)
+
+
+def test_lloyd_round_matches_per_centroid_model():
+    """The Lloyd round shared by _train_centroids, pq_train_pdf and
+    kmeans_assign, against a per-centroid loop: a point equidistant from
+    several centroids joins the lowest index, and a centroid that loses
+    every member keeps its position. Integer coordinates keep every
+    distance exact, so the ties are real ties."""
+    import numpy as np
+
+    from akka_stream_contrib_spark.functions.similarity import (_lloyd_sums,
+                                                                _recenter)
+    cents = np.array([[0.0, 0.0], [2.0, 0.0], [50.0, 50.0], [0.0, 2.0]])
+    X = np.array([[1.0, 0.0],    # tie between centroids 0 and 1
+                  [1.0, 1.0],    # tie between centroids 0, 1 and 3
+                  [3.0, 0.0], [0.0, 3.0], [-1.0, 0.0], [3.0, 1.0]])
+
+    def model(X, cents):
+        d = [[float(((x - c) ** 2).sum()) for c in cents] for x in X]
+        assign = [min(range(len(cents)), key=lambda j: (row[j], j))
+                  for row in d]
+        new = cents.copy()
+        for j in range(len(cents)):
+            members = [x for x, a in zip(X, assign) if a == j]
+            if members:
+                new[j] = np.mean(members, axis=0)
+        return assign, new
+
+    assign, want = model(X, cents)
+    assert assign == [0, 0, 1, 3, 0, 1]
+    n, sums = _lloyd_sums(X, cents)
+    assert n.tolist() == np.bincount(assign, minlength=4).tolist()
+    got = cents.copy()
+    _recenter(got, n, sums)
+    assert np.array_equal(got, want)
+    assert got[2].tolist() == [50.0, 50.0]  # no members: stays put
+    # a second round from the moved centroids, and row-block partials
+    # (kmeans_assign sums one per Arrow batch) add up to the whole
+    assign2, want2 = model(X, got)
+    n1, s1 = _lloyd_sums(X[:2], got)
+    n2, s2 = _lloyd_sums(X[2:], got)
+    assert (n1 + n2).tolist() == np.bincount(assign2, minlength=4).tolist()
+    _recenter(got, n1 + n2, s1 + s2)
+    assert np.array_equal(got, want2)
 
 
 def test_pmi_bigrams_model(spark):

@@ -336,32 +336,17 @@ def test_token_budget_fill_derives_total_without_rescanning_source(spark):
     so the ONE cache-build scan of the source is now visible nested under
     the InMemoryRelation — the invariant is that no parquet scan appears
     OUTSIDE that cache-build subtree."""
-    import re
-
     from akka_stream_contrib_spark.functions.corpus import token_budget_fill
     from akka_stream_contrib_spark.plans import formatted_plan
+    from akka_stream_contrib_spark.plans.explain import plan_nodes
 
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = formatted_plan(token_budget_fill()(df))
-    # same tree walk as plans.explain.count_exchanges: a node line renders
-    # as "...+- NodeName (N)"; everything indented deeper than an
-    # InMemoryRelation line (until indentation returns) is that cache's
-    # build-plan rendering; section boundaries reset the stack.
-    stack: list[int] = []
-    for line in plan.splitlines():
-        if line.startswith("=====") or line.lstrip().startswith("Subquery"):
-            stack = []
-            continue
-        m = re.search(r"([A-Za-z][A-Za-z ]*?) \((\d+)\)\s*$", line)
-        if not m:
-            continue
-        indent = re.search(r"[A-Za-z*]", line).start()
-        while stack and indent <= stack[-1]:
-            stack.pop()
-        if m.group(1).startswith("Scan parquet"):
-            assert stack, f"parquet scan outside the cache build:\n{line}"
-        if m.group(1) == "InMemoryRelation":
-            stack.append(indent)
+    nodes = plan_nodes(formatted_plan(token_budget_fill()(df)))
+    scans = [n for n in nodes if n[0].startswith("Scan parquet")]
+    assert scans
+    for _, node_id, owner in scans:
+        assert owner is not None, \
+            f"parquet scan ({node_id}) outside the cache build"
 
 
 def test_near_dup_family_has_no_nested_loop_self_join(spark):

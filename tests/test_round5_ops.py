@@ -377,12 +377,12 @@ def test_contamination_score_includes_short_docs(spark):
     assert got[2] == (0, 0.0, False)  # too short to shingle, still audited
 
 
-def test_ann_topk_all_small_corpus_no_crash(spark):
-    from akka_stream_contrib_spark.functions.similarity import ann_topk_all
+def test_knn_join_small_corpus_no_crash(spark):
+    from akka_stream_contrib_spark.functions.similarity import knn_join
     rows = [(i, [float(i), 1.0]) for i in range(3)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = ann_topk_all(df, k=10).collect()
-    assert len(out) == 3 * 2  # self masked; only 2 neighbors exist
+    out = knn_join(df, df, k=10).collect()
+    assert len(out) == 3 * 3  # k clipped to the 3-row corpus (self included)
 
 
 def test_simhash_rejects_bits_past_source_hash(spark):

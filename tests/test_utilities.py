@@ -262,8 +262,7 @@ def test_cache_release_swallows_only_a_stopped_context(spark):
 def test_no_unregistered_caches_in_package():
     """Grep gate (r11 cache hygiene): raw ``.cache()`` is banned in the
     package and ``.persist()`` may appear only inside util.pipeline_cache
-    or in dedup.py's registered ``_LAST_PERSISTED`` pattern — an
-    unregistered cache is never dropped by drop_stale_caches and leaks
+    — an unregistered cache is never dropped by drop_stale_caches and leaks
     executor storage for the session lifetime."""
     import glob
     import os
@@ -285,12 +284,6 @@ def test_no_unregistered_caches_in_package():
             # pipeline_cache's own body is the one sanctioned call site
             if n_persist > 1:
                 offenders.append(f"{rel}: {n_persist} .persist() calls")
-        elif rel == os.path.join("functions", "dedup.py"):
-            # every persist must be registered with _LAST_PERSISTED
-            if n_persist != code.count("_LAST_PERSISTED.append"):
-                offenders.append(
-                    f"{rel}: {n_persist} .persist() vs "
-                    f"{code.count('_LAST_PERSISTED.append')} registrations")
         elif n_persist:
             offenders.append(f"{rel}: {n_persist} .persist() calls")
     assert not offenders, offenders

@@ -22,14 +22,30 @@ state wiring is the `sessionize_stream` pattern, stateful.py).
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence, Tuple
+from functools import partial
+from typing import Sequence
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StructField, StructType
+
+from akka_stream_contrib_spark.streaming.stateful import _keyed_state
+from akka_stream_contrib_spark.util import epoch_micros
+
+
+def _funnel_kernel(steps, key, arrays, state):
+    """funnel_stream's step: fold the batch's per-step minimum micros into
+    the user's milestones (min-monoid: batch and row order are
+    irrelevant); emits the updated milestone row."""
+    types, ts = arrays
+    mins = list(state or [None] * len(steps))
+    for i, s in enumerate(steps):
+        sel = ts[(types == s) & ~pd.isna(ts)]
+        if len(sel):
+            m = int(sel.min())
+            mins[i] = m if mins[i] is None else min(mins[i], m)
+    return tuple([m] for m in mins), tuple(mins)
 
 
 def funnel_stream(events: DataFrame,
@@ -44,46 +60,14 @@ def funnel_stream(events: DataFrame,
     window, if wanted, is a filter on the milestone spans downstream —
     state stays #steps scalars per user either way).
 
-    UTC-session requirement (same contract as ``tables.load``): the
-    pandas timestamps Arrow delivers here are tz-naive, and the
-    ``.value // 1_000`` conversion below reads them AS UTC. That equals
-    ``funnel_milestones``' ``epoch_micros`` only when
-    ``spark.sql.session.timeZone`` is UTC — a non-UTC session would
-    silently shift every milestone and break the documented stream/batch
-    equality, so it is asserted up front."""
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone", "")
-    if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
-        raise ValueError(
-            f"funnel_stream requires spark.sql.session.timeZone=UTC "
-            f"(got {tz!r}): tz-naive pandas timestamps are read as UTC, "
-            f"so any other session zone breaks the batch-twin equality")
+    Timestamps become micros in the JVM through the same ``epoch_micros``
+    as ``funnel_milestones``, so stream == batch holds in any session
+    time zone."""
     steps = list(steps)
-    out_schema = StructType(
-        [StructField("key", LongType())]
-        + [StructField(f"t_{s}", LongType()) for s in steps])
-    state_schema = StructType(
-        [StructField(f"t_{s}", LongType()) for s in steps])
-
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        mins = list(state.get) if state.exists else [None] * len(steps)
-        for chunk in pdfs:
-            if not len(chunk):
-                continue
-            for i, s in enumerate(steps):
-                sel = chunk.loc[chunk[type_col] == s, ts_col]
-                if len(sel):
-                    # pandas ns -> micros; min over the chunk then fold
-                    # into state (min-monoid: chunk order is irrelevant)
-                    m = int(sel.min().value // 1_000)
-                    mins[i] = m if mins[i] is None else min(mins[i], m)
-        state.update(tuple(mins))
-        yield pd.DataFrame(
-            [[key[0]] + mins], columns=["key"] + [f"t_{s}" for s in steps])
-
-    return (events
-            .groupBy(key_col)
-            .applyInPandasWithState(_fn, out_schema, state_schema, "append",
-                                    GroupStateTimeout.NoTimeout))
+    fields = ", ".join(f"`t_{s}` long" for s in steps)
+    return _keyed_state(events, key_col, [type_col, ts_col],
+                        partial(_funnel_kernel, steps), fields, fields,
+                        out_key="key", ts_cols=(ts_col,))
 
 
 def funnel_milestones(events: DataFrame,
@@ -94,8 +78,6 @@ def funnel_milestones(events: DataFrame,
     the first occurrence of each step — ONE map-combined conditional-min
     groupBy (the q_funnel_conversion shape, micros-typed so the streaming
     equality is exact integers, no timestamp-rendering term)."""
-    from akka_stream_contrib_spark.util import epoch_micros
-
     return events.groupBy(F.col(key_col).alias("key")).agg(*[
         F.min(F.when(F.col(type_col) == s, epoch_micros(F.col(ts_col))))
         .alias(f"t_{s}") for s in steps])

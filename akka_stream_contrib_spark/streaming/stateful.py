@@ -1,4 +1,4 @@
-"""Stateful streaming operators via ``applyInPandasWithState``.
+"""Stateful streaming operators: one keyed-state shell, one kernel each.
 
 These carry the reference semantics that genuinely need cross-batch state:
 
@@ -9,6 +9,24 @@ These carry the reference semantics that genuinely need cross-batch state:
   timeout re-emits the extrapolated last element when a key goes idle.
 - ``accumulate_while_unchanged_stream`` — AccumulateWhileUnchanged.scala with
   the ``maxDuration`` flush (reference :115-126) as a state timeout.
+- the cross-batch twins of batch operators: ``sessionize_stream``,
+  ``heavy_hitters_stream``, ``merge_by_index_stream``,
+  ``delay_strategy_stream``, ``preference_pairs_stream``,
+  ``interleave_stream`` (and ``funnel.funnel_stream``).
+
+Every twin is a kernel plus one ``_keyed_state`` call — the D-Streams
+form state(t) = f(state(t-1), batch(t)). The shell owns the
+``applyInPandasWithState`` plumbing: it projects the key and the kernel's
+``cols`` (those named in ``ts_cols`` as bigint epoch micros, computed in
+the JVM by ``util.epoch_micros``), concatenates a key's Arrow chunks once
+into numpy arrays and calls ``kernel(key, arrays, state) -> (out,
+new_state)``. ``arrays`` is the tuple of column arrays in ``cols`` order,
+or None on a processing-time timeout call; ``state`` is the stored tuple
+or None. ``out`` is None or a tuple of arrays in ``out_fields`` order,
+emitted next to the key, which keeps its input type. A None ``new_state``
+removes the state; any other value updates it and re-arms ``timeout_ms``.
+Kernels see whole micro-batches and plain arrays, so each one replays
+without Spark.
 
 Scale note (SURVEY.md §7 watch list): the reference's state is global per
 stream; a single grouping key serializes through one state partition. All
@@ -19,19 +37,97 @@ behavior on bounded data.
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+import hashlib
+from functools import partial
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType, StringType, StructField, StructType, BooleanType, ArrayType,
-    DoubleType, TimestampType,
-)
+from pyspark.sql.types import StructField, StructType
 
 from akka_stream_contrib_spark.util import epoch_micros
+
+
+def _group_fn(kernel, cols, names, timeout_ms):
+    """The per-key ``applyInPandasWithState`` body of ``_keyed_state``;
+    ``names`` are the output columns, key first."""
+
+    def _fn(key, pdfs, state: GroupState):
+        arrays = None
+        if not state.hasTimedOut:
+            # ALL of the key's Arrow chunks, before any kernel sort: a
+            # >maxRecordsPerBatch group arrives as several chunks
+            chunks = [c for c in pdfs if len(c)]
+            if not chunks:
+                return
+            arrays = tuple(np.concatenate([ch[c].to_numpy() for ch in chunks])
+                           for c in cols)
+        out, new_state = kernel(key[0], arrays, state.getOption)
+        if new_state is None:
+            state.remove()
+        else:
+            state.update(new_state)
+            if timeout_ms:
+                state.setTimeoutDuration(timeout_ms)
+        if out is not None and len(out[0]):
+            yield pd.DataFrame(dict(zip(names, (key[0], *out))))
+
+    return _fn
+
+
+def _keyed_state(df: DataFrame, key_col: str, cols, kernel, out_fields: str,
+                 state_schema: str, timeout_ms: int | None = None,
+                 out_key: str | None = None, ts_cols=()) -> DataFrame:
+    """Run ``kernel`` per ``key_col`` across micro-batches (the contract is
+    in the module docstring). ``out_fields`` and ``state_schema`` are DDL
+    strings; the output key column is ``out_key`` (default ``key_col``)."""
+    out_schema = StructType(
+        [StructField(out_key or key_col, df.schema[key_col].dataType)]
+        + StructType.fromDDL(out_fields).fields)
+    return (df.select(key_col, *[epoch_micros(c).alias(c) if c in ts_cols
+                                 else c for c in cols])
+            .groupBy(key_col)
+            .applyInPandasWithState(
+                _group_fn(kernel, cols, out_schema.names, timeout_ms),
+                out_schema, state_schema, "append",
+                GroupStateTimeout.ProcessingTimeTimeout if timeout_ms
+                else GroupStateTimeout.NoTimeout))
+
+
+def _int64(a: np.ndarray, what: str) -> np.ndarray:
+    """``a`` as int64, failing loudly on NULL — ``astype`` alone would turn
+    a NULL (NaN) into INT64_MIN."""
+    if a.dtype.kind not in "iub" and pd.isna(a).any():
+        raise ValueError(f"{what} is NULL")
+    return a.astype(np.int64, copy=False)
+
+
+def _throttle_kernel(key, arrays, state):
+    """token_throttle_stream's step: bank the batch's tokens, queue its
+    elements, then release the longest (seq, cost)-ordered prefix of the
+    queue whose running cost the balance covers."""
+    is_token, amount, seq, cost = arrays
+    if is_token.dtype != bool:
+        raise ValueError("token_throttle_stream: is_token is NULL")
+    balance, pseq, pcost = state or (0, [], [])
+    balance += int(np.nansum(amount[is_token]))
+    seq = np.concatenate([np.asarray(pseq, np.int64), _int64(
+        seq[~is_token], "token_throttle_stream: element seq")])
+    cost = np.concatenate([np.asarray(pcost, np.int64), _int64(
+        cost[~is_token], "token_throttle_stream: element cost")])
+    order = np.lexsort((cost, seq))
+    seq, cost = seq[order], cost[order]
+    cum = np.cumsum(cost)
+    over = np.flatnonzero(cum > balance)
+    k = int(over[0]) if len(over) else len(cum)
+    if (cost[:k] < 0).any():
+        raise ValueError("negative cost")  # TokenThrottle.scala:117-121
+    if k:
+        balance -= int(cum[k - 1])
+    return (seq[:k], cost[:k]), (balance, seq[k:].tolist(), cost[k:].tolist())
 
 
 def token_throttle_stream(unioned: DataFrame, key_col: str = "key") -> DataFrame:
@@ -44,48 +140,23 @@ def token_throttle_stream(unioned: DataFrame, key_col: str = "key") -> DataFrame
     batch banks its tokens then drains the queue in order while affordable —
     the same accounting invariant (consumed == Σ emitted costs).
     """
-    out_schema = StructType([
-        StructField(key_col, LongType()),
-        StructField("seq", LongType()),
-        StructField("cost", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("balance", LongType()),
-        StructField("pending_seq", ArrayType(LongType())),
-        StructField("pending_cost", ArrayType(LongType())),
-    ])
+    return _keyed_state(
+        unioned, key_col, ["is_token", "amount", "seq", "cost"],
+        _throttle_kernel, "seq long, cost long",
+        "balance long, pending_seq array<long>, pending_cost array<long>")
 
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            balance, pseq, pcost = state.get
-            pending = list(zip(pseq, pcost))
-        else:
-            balance, pending = 0, []
-        for pdf in pdfs:
-            tokens = pdf[pdf["is_token"]]
-            balance += int(tokens["amount"].fillna(0).sum())
-            elems = pdf[~pdf["is_token"]][["seq", "cost"]]
-            pending.extend(
-                (int(s), int(c)) for s, c in zip(elems["seq"], elems["cost"]))
-        pending.sort()
-        emitted = []
-        while pending and pending[0][1] <= balance:
-            s, c = pending.pop(0)
-            if c < 0:
-                raise ValueError("negative cost")  # TokenThrottle.scala:117-121
-            balance -= c
-            emitted.append((key[0], s, c))
-        state.update((balance,
-                      [s for s, _ in pending], [c for _, c in pending]))
-        if emitted:
-            yield pd.DataFrame(emitted, columns=[key_col, "seq", "cost"])
 
-    return (
-        unioned.groupBy(key_col)
-        .applyInPandasWithState(
-            _fn, out_schema, state_schema, "append",
-            GroupStateTimeout.NoTimeout)
-    )
+def _keep_alive_kernel(key, arrays, state):
+    """keep_alive_stream's step: pass the batch through and remember its
+    last value; on a timeout call, re-emit that value as a heartbeat. A
+    NULL value passes through and is what the heartbeat repeats — the
+    batch ``keep_alive_concat`` rule."""
+    if arrays is None:
+        return (([state[0]], [True]), state) if state else (None, None)
+    (value,) = arrays
+    last = value[-1]
+    return ((value, np.zeros(len(value), bool)),
+            (None if pd.isna(last) else int(last),))
 
 
 def keep_alive_stream(elements: DataFrame, interval_ms: int,
@@ -93,39 +164,31 @@ def keep_alive_stream(elements: DataFrame, interval_ms: int,
     """Pass elements through; when a key sees no input for ``interval_ms`` of
     processing time, re-emit its last value flagged ``is_heartbeat=true``
     (extrapolate = repeat-last). Output: (key, value, is_heartbeat)."""
-    out_schema = StructType([
-        StructField(key_col, LongType()),
-        StructField("value", LongType()),
-        StructField("is_heartbeat", BooleanType()),
-    ])
-    state_schema = StructType([StructField("last_value", LongType())])
+    return _keyed_state(elements, key_col, ["value"], _keep_alive_kernel,
+                        "value long, is_heartbeat boolean", "last_value long",
+                        timeout_ms=interval_ms)
 
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            if state.exists:
-                (last,) = state.get
-                state.setTimeoutDuration(interval_ms)
-                yield pd.DataFrame([(key[0], last, True)],
-                                   columns=[key_col, "value", "is_heartbeat"])
-            return
-        rows = []
-        last = state.get[0] if state.exists else None
-        for pdf in pdfs:
-            for v in pdf["value"]:
-                last = int(v)
-                rows.append((key[0], last, False))
-        if last is not None:
-            state.update((last,))
-            state.setTimeoutDuration(interval_ms)
-        if rows:
-            yield pd.DataFrame(rows, columns=[key_col, "value", "is_heartbeat"])
 
-    return (
-        elements.groupBy(key_col)
-        .applyInPandasWithState(
-            _fn, out_schema, state_schema, "append",
-            GroupStateTimeout.ProcessingTimeTimeout)
-    )
+def _accumulate_kernel(key, arrays, state):
+    """accumulate_while_unchanged_stream's step: fold the seq-ordered batch
+    onto the open run in state; emit every run the batch closes and keep
+    the last one open. Runs compare NULL-safely, as the batch twin does:
+    NULL after 'a' is a change, NULL after NULL is the same run. A timeout
+    call flushes the open run."""
+    if arrays is None:
+        return (tuple([v] for v in state), None) if state else (None, None)
+    seq, prop = arrays
+    seq = _int64(seq, "accumulate_while_unchanged_stream: seq")
+    order = np.argsort(seq, kind="stable")
+    seq, prop, cnt = seq[order], prop[order], np.ones(len(seq), np.int64)
+    if state:
+        prop = np.concatenate([np.array([state[0]], dtype=object), prop])
+        cnt = np.concatenate([[state[1]], cnt])
+        seq = np.concatenate([[state[2]], seq])
+    start = np.flatnonzero(np.concatenate([[True], prop[1:] != prop[:-1]]))
+    runs = (prop[start], np.add.reduceat(cnt, start), seq[start])
+    return (tuple(r[:-1] for r in runs),
+            (runs[0][-1], int(runs[1][-1]), int(runs[2][-1])))
 
 
 def accumulate_while_unchanged_stream(elements: DataFrame,
@@ -136,55 +199,12 @@ def accumulate_while_unchanged_stream(elements: DataFrame,
     (key, prop, cnt, first_seq) when the property changes; ``max_duration_ms``
     flushes an open run via processing-time timeout
     (AccumulateWhileUnchanged.scala:115-126)."""
-    out_schema = StructType([
-        StructField(key_col, LongType()),
-        StructField("prop", StringType()),
-        StructField("cnt", LongType()),
-        StructField("first_seq", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("prop", StringType()),
-        StructField("cnt", LongType()),
-        StructField("first_seq", LongType()),
-    ])
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout
-               if max_duration_ms else GroupStateTimeout.NoTimeout)
-
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            if state.exists:
-                prop, cnt, first = state.get
-                state.remove()
-                yield pd.DataFrame([(key[0], prop, cnt, first)],
-                                   columns=[key_col, "prop", "cnt", "first_seq"])
-            return
-        cur = state.get if state.exists else None
-        finished = []
-        chunks = list(pdfs)
-        rows = pd.concat(chunks) if chunks else pd.DataFrame()
-        if len(rows):
-            rows = rows.sort_values("seq")
-            for p, s in zip(rows["prop"], rows["seq"]):
-                p, s = str(p), int(s)
-                if cur is None:
-                    cur = (p, 1, s)
-                elif cur[0] == p:
-                    cur = (p, cur[1] + 1, cur[2])
-                else:
-                    finished.append((key[0], *cur))
-                    cur = (p, 1, s)
-        if cur is not None:
-            state.update(cur)
-            if max_duration_ms:
-                state.setTimeoutDuration(max_duration_ms)
-        if finished:
-            yield pd.DataFrame(finished,
-                               columns=[key_col, "prop", "cnt", "first_seq"])
-
-    return (
-        elements.groupBy(key_col)
-        .applyInPandasWithState(_fn, out_schema, state_schema, "append", timeout)
-    )
+    return _keyed_state(
+        elements.withColumn("prop", F.col("prop").cast("string")), key_col,
+        ["seq", "prop"], _accumulate_kernel,
+        "prop string, cnt long, first_seq long",
+        "prop string, cnt long, first_seq long",
+        timeout_ms=max_duration_ms or None)
 
 
 def _number_sessions(ts: np.ndarray, eid: np.ndarray, state: tuple,
@@ -215,6 +235,16 @@ def _number_sessions(ts: np.ndarray, eid: np.ndarray, state: tuple,
         int(max(ts[-1], clock[-1])), int(session_id[-1]), int(session_pos[-1]))
 
 
+def _session_kernel(gap_us, key, arrays, state):
+    """sessionize_stream's step: ``_number_sessions`` on the batch."""
+    ts, eid = arrays
+    *out, after = _number_sessions(
+        _int64(ts, "sessionize_stream: ts"),
+        _int64(eid, "sessionize_stream: event_id"),
+        state or (None, 0, 0), gap_us)
+    return out, after
+
+
 def sessionize_stream(elements: DataFrame, gap_s: int,
                       key_col: str = "user_id") -> DataFrame:
     """Streaming per-event session assignment: the cross-batch form of
@@ -229,40 +259,24 @@ def sessionize_stream(elements: DataFrame, gap_s: int,
     Input needs ``(key_col, ts timestamp, event_id long)``; emits
     ``(key, event_id, session_id, session_pos)`` in append mode.
     """
-    out_schema = StructType([
-        StructField("key", LongType()), StructField("event_id", LongType()),
-        StructField("session_id", LongType()),
-        StructField("session_pos", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("last_us", LongType()),
-        StructField("n_sessions", LongType()),
-        StructField("pos", LongType()),
-    ])
-    gap_us = gap_s * 1_000_000
+    return _keyed_state(
+        elements, key_col, ["ts", "event_id"],
+        partial(_session_kernel, gap_s * 1_000_000),
+        "event_id long, session_id long, session_pos long",
+        "last_us long, n_sessions long, pos long",
+        out_key="key", ts_cols=("ts",))
 
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        # concat ALL Arrow chunks before _number_sessions' one sort: a
-        # >maxRecordsPerBatch group arrives as several chunks, and
-        # chunk-local sorts would let the clock move backwards across the
-        # boundary — wrong gap tests, wrong session ids
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            return
-        eid, session_id, session_pos, after = _number_sessions(
-            np.concatenate([c["_ts_us"].to_numpy(np.int64) for c in chunks]),
-            np.concatenate([c["event_id"].to_numpy(np.int64) for c in chunks]),
-            state.get if state.exists else (None, 0, 0), gap_us)
-        state.update(after)
-        yield pd.DataFrame({"key": key[0], "event_id": eid,
-                            "session_id": session_id,
-                            "session_pos": session_pos})
 
-    return (elements
-            .select(key_col, epoch_micros("ts").alias("_ts_us"), "event_id")
-            .groupBy(key_col)
-            .applyInPandasWithState(_fn, out_schema, state_schema, "append",
-                                    GroupStateTimeout.NoTimeout))
+def _mg_kernel(capacity, key, arrays, state):
+    """heavy_hitters_stream's step: one Misra-Gries update with the whole
+    micro-batch's item counts; emits the bucket's counters."""
+    from akka_stream_contrib_spark.functions.sketches import mg_update
+
+    counters = dict(zip(state[0], state[1])) if state else {}
+    counters = mg_update(counters, pd.Series(arrays[0]).value_counts(),
+                         capacity)
+    items, counts = list(counters), [int(v) for v in counters.values()]
+    return (items, counts), (items, counts)
 
 
 def heavy_hitters_stream(items: DataFrame, item_col: str = "item",
@@ -282,52 +296,91 @@ def heavy_hitters_stream(items: DataFrame, item_col: str = "item",
     of all buckets. Counts are MG lower bounds (within
     items-seen-in-bucket/(capacity+1) of truth — exact while a bucket's
     distinct count stays ≤ capacity); re-rank heavy candidates exactly
-    with a batch recount if the application needs true counts.
+    with a batch recount if the application needs true counts. The
+    decrement runs once per micro-batch, so the counters do not depend on
+    how Spark chunks a batch into Arrow record batches.
 
     Emits ``(bucket, item, mg_count)``. State per bucket = two parallel
     arrays, bounded by ``capacity`` entries.
     """
-    from akka_stream_contrib_spark.functions.sketches import mg_update
-    from pyspark.sql import functions as F
-
-    out_schema = StructType([
-        StructField("bucket", LongType()),
-        StructField("item", StringType()),
-        StructField("mg_count", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("items", ArrayType(StringType())),
-        StructField("counts", ArrayType(LongType())),
-    ])
-
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            s_items, s_counts = state.get
-            counters = dict(zip(list(s_items), [int(c) for c in s_counts]))
-        else:
-            counters = {}
-        for pdf in pdfs:
-            counters = mg_update(counters, pdf[item_col].value_counts(),
-                                 capacity)
-        state.update((list(counters.keys()),
-                      [int(v) for v in counters.values()]))
-        yield pd.DataFrame({
-            "bucket": [key[0]] * len(counters),
-            "item": list(counters.keys()),
-            "mg_count": [int(v) for v in counters.values()],
-        })
-
     bucketed = items.withColumn(
         "_bucket", F.pmod(F.xxhash64(F.col(item_col)), F.lit(n_buckets)))
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        _fn, out_schema, state_schema, "append",
-        GroupStateTimeout.NoTimeout)
+    return _keyed_state(bucketed, "_bucket", [item_col],
+                        partial(_mg_kernel, capacity),
+                        "item string, mg_count long",
+                        "items array<string>, counts array<long>",
+                        out_key="bucket")
 
 
 #: end-of-branch sentinel index for merge_by_index_stream: a row with
 #: idx == CLOSE_INDEX (Long.MaxValue — above any real index by convention)
 #: declares its branch closed, releasing the frontier for bounded streams.
 CLOSE_INDEX = (1 << 63) - 1
+
+
+def _merge_kernel(n_branches, key, arrays, state):
+    """merge_by_index_stream's step: validate and buffer the batch, then
+    release the buffer's prefix that is next-expected or below every
+    branch's high-water mark."""
+    expected, pos, hwm, bi, bb, bp = state or (
+        0, 0, [None] * n_branches, [], [], [])
+    hwm = list(hwm)
+    buf = {int(i): (int(b), p) for i, b, p in zip(bi, bb, bp)}
+    branch, idx, payload = arrays
+    branch = _int64(branch, "merge_by_index_stream: branch")
+    idx = _int64(idx, "merge_by_index_stream: idx")
+    # arrival order within a micro-batch is NOT data order (the groupBy
+    # shuffle interleaves source partitions/files) — sort the batch by
+    # idx before the monotonicity checks, or valid input whose rows
+    # arrive as (3, 1) would spuriously fail the stream. Per-branch
+    # sequences are strictly increasing, so the global idx sort restores
+    # every branch's event order within the batch.
+    order = np.argsort(idx, kind="stable")
+    for b, i, p in zip(branch[order].tolist(), idx[order].tolist(),
+                       payload[order].tolist()):
+        if not (0 <= b < n_branches):
+            raise ValueError(
+                f"merge_by_index_stream: branch {b} out of range "
+                f"[0, {n_branches})")
+        if i == CLOSE_INDEX:
+            # end-of-branch sentinel: the branch's high-water mark jumps
+            # to +inf, so it stops constraining the frontier and a bounded
+            # stream flushes its tail — the micro-batch rendering of the
+            # reference's updateMaxBufferLength shrink-on-close
+            # (MergeByIndex.scala:116-119). Idempotent: a replayed
+            # sentinel (at-least-once sources) is a no-op. The idx sort
+            # above puts same-batch data on the branch before its close.
+            hwm[b] = CLOSE_INDEX
+            continue
+        if hwm[b] == CLOSE_INDEX:
+            raise ValueError(
+                f"merge_by_index_stream: element idx {i} arrived on "
+                f"closed branch {b} (end-of-branch sentinel already seen)")
+        if i < expected:
+            raise ValueError(
+                f"merge_by_index_stream: non-monotonic index {i} < "
+                f"expected {expected} (reference "
+                "MergeByIndex.scala:139-143 fails the stream)")
+        if i in buf:
+            raise ValueError(f"merge_by_index_stream: duplicate index {i}")
+        if hwm[b] is not None and i <= hwm[b]:
+            raise ValueError(
+                f"merge_by_index_stream: branch {b} index {i} not "
+                f"strictly increasing past {hwm[b]}")
+        buf[i] = (b, None if p is None else str(p))
+        hwm[b] = i
+    frontier = min(hwm) if all(h is not None for h in hwm) else None
+    emitted = []
+    for i in sorted(buf):
+        if i != expected and (frontier is None or i > frontier):
+            break
+        b, p = buf.pop(i)
+        emitted.append((i, b, p, pos))
+        pos, expected = pos + 1, i + 1
+    bi = sorted(buf)
+    return (tuple(map(list, zip(*emitted))) if emitted else None,
+            (expected, pos, hwm, bi, [buf[i][0] for i in bi],
+             [buf[i][1] for i in bi]))
 
 
 def merge_by_index_stream(elements: DataFrame, n_branches: int,
@@ -378,105 +431,12 @@ def merge_by_index_stream(elements: DataFrame, n_branches: int,
     """
     if n_branches < 1:
         raise ValueError("merge_by_index_stream needs n_branches >= 1")
-    # the key column keeps ITS OWN type (delay_flow_tws convention) — a
-    # hard-coded LongType would fail Arrow conversion on string keys with
-    # an opaque runtime error (r9 ADVICE)
-    out_schema = StructType([
-        StructField(key_col, elements.schema[key_col].dataType),
-        StructField("idx", LongType()),
-        StructField("branch", LongType()),
-        StructField("payload", StringType()),
-        StructField("pos", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("expected", LongType()),
-        StructField("pos", LongType()),
-        StructField("hwm", ArrayType(LongType())),
-        StructField("buf_idx", ArrayType(LongType())),
-        StructField("buf_branch", ArrayType(LongType())),
-        StructField("buf_payload", ArrayType(StringType())),
-    ])
-
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            expected, pos, hwm, bi, bb, bp = state.get
-            hwm = list(hwm)
-            buf = {int(i): (int(b), p) for i, b, p in zip(bi, bb, bp)}
-        else:
-            expected, pos, hwm, buf = 0, 0, [None] * n_branches, {}
-        # arrival order within a micro-batch is NOT data order (the groupBy
-        # shuffle interleaves source partitions/files) — sort the batch by
-        # idx before the monotonicity checks, or valid input whose rows
-        # arrive as (3, 1) would spuriously fail the stream. Per-branch
-        # sequences are strictly increasing, so the global idx sort restores
-        # every branch's event order within the batch.
-        chunks = list(pdfs)
-        rows = (pd.concat(chunks).sort_values("idx")
-                if chunks else pd.DataFrame(
-                    columns=["branch", "idx", "payload"]))
-        if len(rows):
-            for b, i, p in zip(rows["branch"], rows["idx"], rows["payload"]):
-                b, i = int(b), int(i)
-                if not (0 <= b < n_branches):
-                    raise ValueError(
-                        f"merge_by_index_stream: branch {b} out of range "
-                        f"[0, {n_branches})")
-                if i == CLOSE_INDEX:
-                    # end-of-branch sentinel: the branch's high-water mark
-                    # jumps to +inf, so it stops constraining the frontier
-                    # and a bounded stream flushes its tail — the
-                    # micro-batch rendering of the reference's
-                    # updateMaxBufferLength shrink-on-close
-                    # (MergeByIndex.scala:116-119). Idempotent: a replayed
-                    # sentinel (at-least-once sources) is a no-op. The
-                    # global idx sort above guarantees same-batch data on
-                    # the branch is processed before its close.
-                    hwm[b] = CLOSE_INDEX
-                    continue
-                if hwm[b] == CLOSE_INDEX:
-                    raise ValueError(
-                        f"merge_by_index_stream: element idx {i} arrived on "
-                        f"closed branch {b} (end-of-branch sentinel already "
-                        "seen)")
-                if i < expected:
-                    raise ValueError(
-                        f"merge_by_index_stream: non-monotonic index {i} < "
-                        f"expected {expected} (reference "
-                        "MergeByIndex.scala:139-143 fails the stream)")
-                if i in buf:
-                    raise ValueError(
-                        f"merge_by_index_stream: duplicate index {i}")
-                if hwm[b] is not None and i <= hwm[b]:
-                    raise ValueError(
-                        f"merge_by_index_stream: branch {b} index {i} not "
-                        f"strictly increasing past {hwm[b]}")
-                buf[i] = (b, None if p is None else str(p))
-                hwm[b] = i
-        frontier = None
-        if all(h is not None for h in hwm):
-            frontier = min(hwm)
-        emitted = []
-        for i in sorted(buf):
-            if i == expected or (frontier is not None and i <= frontier):
-                b, p = buf.pop(i)
-                emitted.append((key[0], i, b, p, pos))
-                pos += 1
-                expected = i + 1
-            else:
-                break
-        bi = sorted(buf)
-        state.update((expected, pos, hwm, bi,
-                      [buf[i][0] for i in bi], [buf[i][1] for i in bi]))
-        if emitted:
-            yield pd.DataFrame(
-                emitted, columns=[key_col, "idx", "branch", "payload", "pos"])
-
-    return (
-        elements.groupBy(key_col)
-        .applyInPandasWithState(
-            _fn, out_schema, state_schema, "append",
-            GroupStateTimeout.NoTimeout)
-    )
+    return _keyed_state(
+        elements, key_col, ["branch", "idx", "payload"],
+        partial(_merge_kernel, n_branches),
+        "idx long, branch long, payload string, pos long",
+        "expected long, pos long, hwm array<long>, buf_idx array<long>, "
+        "buf_branch array<long>, buf_payload array<string>")
 
 
 def linear_increasing_delay_strategy(step_s: float, initial_s: float = 0.0,
@@ -512,6 +472,32 @@ def linear_increasing_delay_strategy(step_s: float, initial_s: float = 0.0,
     return "delay double", (float(initial_s),), _next
 
 
+def _delay_decisions(next_delay, st, rows: pd.DataFrame, seq_col: str):
+    """The strategy loop of ``delay_strategy_stream`` and
+    ``tws.DelayFlowProcessor``: feed ``rows`` to ``next_delay`` in
+    ``seq_col`` order, one row mapping per call. Returns the sorted rows,
+    their delays in seconds and the final strategy state."""
+    rows = rows.sort_values(seq_col, kind="stable")
+    delays = []
+    for _, r in rows.iterrows():
+        delay, st = next_delay(st, r)
+        delays.append(float(delay))
+    return rows, np.asarray(delays, dtype=float), st
+
+
+def _delay_kernel(strategy, key_col, seq_col, ts_col, cols, key, arrays,
+                  state):
+    """delay_strategy_stream's step: the strategy loop over the batch's
+    rows (every input column, the key included), decisions as data."""
+    rows = pd.DataFrame(dict(zip(cols, arrays))).assign(**{key_col: key})
+    rows, delays, st = _delay_decisions(
+        strategy[2], tuple(state or strategy[1]), rows, seq_col)
+    deliver = (rows[ts_col].to_numpy()
+               + pd.to_timedelta(delays, unit="s").to_numpy())
+    return (_int64(rows[seq_col].to_numpy(), "delay_strategy_stream: seq"),
+            delays, deliver), st
+
+
 def delay_strategy_stream(elements: DataFrame, strategy,
                           key_col: str = "key", seq_col: str = "seq",
                           ts_col: str = "ts") -> DataFrame:
@@ -534,40 +520,40 @@ def delay_strategy_stream(elements: DataFrame, strategy,
     ``operators/delay.py::delay_flow``. Scale: one state-store row per key,
     O(1) state per key regardless of stream length.
     """
-    state_ddl, init_state, next_delay = strategy
-    # key keeps its input type (see merge_by_index_stream note / r9 ADVICE)
-    out_schema = StructType([
-        StructField(key_col, elements.schema[key_col].dataType),
-        StructField("seq", LongType()),
-        StructField("delay_s", DoubleType()),
-        StructField("deliver_ts", TimestampType()),
-    ])
+    cols = [c for c in elements.columns if c != key_col]
+    return _keyed_state(
+        elements, key_col, cols,
+        partial(_delay_kernel, strategy, key_col, seq_col, ts_col, cols),
+        "seq long, delay_s double, deliver_ts timestamp", strategy[0])
 
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        st = tuple(state.get) if state.exists else tuple(init_state)
-        chunks = list(pdfs)
-        rows = pd.concat(chunks) if chunks else pd.DataFrame()
-        emitted = []
-        if len(rows):
-            rows = rows.sort_values(seq_col)
-            for _, r in rows.iterrows():
-                delay, st = next_delay(st, r)
-                deliver = (None if pd.isna(r[ts_col])
-                           else r[ts_col] + pd.Timedelta(seconds=float(delay)))
-                emitted.append((key[0], int(r[seq_col]), float(delay),
-                                deliver))
-        state.update(st)
-        if emitted:
-            yield pd.DataFrame(
-                emitted, columns=[key_col, "seq", "delay_s", "deliver_ts"])
 
-    return (
-        elements.groupBy(key_col)
-        .applyInPandasWithState(
-            _fn, out_schema,
-            StructType.fromDDL(state_ddl), "append",
-            GroupStateTimeout.NoTimeout)
-    )
+def _preference_kernel(margin, key, arrays, state):
+    """preference_pairs_stream's step: merge the batch's best and worst
+    scored candidates into state; emit the pair once it qualifies."""
+    cand, text, score = arrays
+    ok = ~pd.isna(score)
+    if not ok.any():
+        return None, state
+    bs, bi, bt, ws, wi, wt, n, upd = state or (None,) * 6 + (0, 0)
+    cand, text, score = cand[ok], text[ok], score[ok].astype(float)
+    # the batch's best (higher score, then LOWER id) and worst (lower
+    # score, then HIGHER id): the batch form's exact tie-breaks
+    top = np.flatnonzero(score == score.max())
+    top = top[np.argmin(cand[top])]
+    bot = np.flatnonzero(score == score.min())
+    bot = bot[np.argmax(cand[bot])]
+    s, c = float(score[top]), cand[top]
+    if bs is None or s > bs or (s == bs and c < bi):
+        bs, bi, bt = s, c, text[top]
+    s, c = float(score[bot]), cand[bot]
+    if ws is None or s < ws or (s == ws and c > wi):
+        ws, wi, wt = s, c, text[bot]
+    n, upd = n + int(ok.sum()), upd + 1
+    out = None
+    if n >= 2 and bs - ws >= margin:
+        out = ([bi], [wi], [bt], [wt], [round(bs - ws, 6) + 0.0], [n], [upd])
+    return out, (bs, bi, bt, ws, wi, wt, n, upd)
+
 
 def preference_pairs_stream(candidates: DataFrame, margin: float = 0.0,
                             prompt_col: str = "prompt_id",
@@ -590,68 +576,33 @@ def preference_pairs_stream(candidates: DataFrame, margin: float = 0.0,
     prompt (two candidate structs + two counters) regardless of stream
     length.
     """
-    ptype = candidates.schema[prompt_col].dataType
-    ctype = candidates.schema[cand_col].dataType
-    out_schema = StructType([
-        StructField(prompt_col, ptype),
-        StructField("chosen_id", ctype),
-        StructField("rejected_id", ctype),
-        StructField("chosen_text", StringType()),
-        StructField("rejected_text", StringType()),
-        StructField("score_margin", DoubleType()),
-        StructField("n_candidates", LongType()),
-        StructField("upd", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("bs", DoubleType()), StructField("bi", ctype),
-        StructField("bt", StringType()),
-        StructField("ws", DoubleType()), StructField("wi", ctype),
-        StructField("wt", StringType()),
-        StructField("n", LongType()), StructField("upd", LongType()),
-    ])
+    ctype = candidates.schema[cand_col].dataType.simpleString()
+    return _keyed_state(
+        candidates, prompt_col, [cand_col, text_col, score_col],
+        partial(_preference_kernel, margin),
+        f"chosen_id {ctype}, rejected_id {ctype}, chosen_text string, "
+        "rejected_text string, score_margin double, n_candidates long, "
+        "upd long",
+        f"bs double, bi {ctype}, bt string, ws double, wi {ctype}, "
+        "wt string, n long, upd long")
 
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            bs, bi, bt, ws, wi, wt, n, upd = state.get
-        else:
-            bs = bi = bt = ws = wi = wt = None
-            n, upd = 0, 0
-        # vectorized per-batch reduction (a hot prompt can land millions
-        # of candidates in one micro-batch — per-row Python iteration
-        # would serialize exactly the case the batch form is built for):
-        # two C-speed sorts pick the batch's best/worst with the exact
-        # tie-break keys, then one merge against state
-        chunks = list(pdfs)
-        rows = pd.concat(chunks) if chunks else pd.DataFrame()
-        changed = False
-        if len(rows):
-            rows = rows[rows[score_col].notna()]
-        if len(rows):
-            changed = True
-            n += len(rows)
-            top = rows.sort_values([score_col, cand_col],
-                                   ascending=[False, True]).iloc[0]
-            bot = rows.sort_values([score_col, cand_col],
-                                   ascending=[True, False]).iloc[0]
-            s, c, t = float(top[score_col]), top[cand_col], top[text_col]
-            if bs is None or s > bs or (s == bs and c < bi):
-                bs, bi, bt = s, c, t
-            s, c, t = float(bot[score_col]), bot[cand_col], bot[text_col]
-            if ws is None or s < ws or (s == ws and c > wi):
-                ws, wi, wt = s, c, t
-        if changed:
-            upd += 1
-            state.update((bs, bi, bt, ws, wi, wt, n, upd))
-            if n >= 2 and bs - ws >= margin:
-                yield pd.DataFrame([{
-                    prompt_col: key[0], "chosen_id": bi, "rejected_id": wi,
-                    "chosen_text": bt, "rejected_text": wt,
-                    "score_margin": round(bs - ws, 6) + 0.0,
-                    "n_candidates": n, "upd": upd}])
 
-    return (candidates.groupBy(prompt_col)
-            .applyInPandasWithState(_fn, out_schema, state_schema, "append",
-                                    GroupStateTimeout.NoTimeout))
+def _interleave_kernel(weights, default_weight, seed, key, arrays, state):
+    """interleave_stream's step: order the batch by md5(seed, id), then
+    give each row the next stride-schedule slot of its source."""
+    cnt = state[0] if state else 0
+    w = float(weights.get(key, default_weight))
+    phase = (int(hashlib.md5(f"{seed}:phase:{key}".encode())
+                 .hexdigest()[:8], 16) % 1_000_000) / 1_000_000.0
+    ids = [i for _, i in sorted(
+        (hashlib.md5(f"{seed}:ord:{i}".encode()).hexdigest(), i)
+        for i in arrays[0].tolist())]
+    pos = np.arange(cnt + 1, cnt + len(ids) + 1)
+    # 6-dp TRUNCATION, matching the batch form: floor of identical IEEE
+    # doubles is engine/runtime-independent, unlike rounding at the exact
+    # .xxxxxx5 halves this arithmetic produces
+    slot = np.floor((pos - phase) / w * 1_000_000.0) / 1_000_000.0
+    return (ids, pos, slot), (cnt + len(ids),)
 
 
 def interleave_stream(rows: DataFrame, weights: "dict[str, float]",
@@ -680,52 +631,8 @@ def interleave_stream(rows: DataFrame, weights: "dict[str, float]",
     for s, w in weights.items():
         if w <= 0:
             raise ValueError(f"weight for {s!r} must be > 0, got {w}")
-    import hashlib
-    import math
-
-    stype = rows.schema[source_col].dataType
-    itype = rows.schema[id_col].dataType
-    out_schema = StructType([
-        StructField(source_col, stype), StructField(id_col, itype),
-        StructField("src_pos", LongType()),
-        StructField("slot", DoubleType()),
-    ])
-    state_schema = StructType([StructField("cnt", LongType())])
-
-    def _slot(pos: int, phase: float, w: float) -> float:
-        # 6-dp TRUNCATION, matching the batch form: floor of identical
-        # IEEE doubles is engine/runtime-independent, unlike rounding at
-        # the exact .xxxxxx5 halves this arithmetic produces
-        x = (pos - phase) / w
-        return math.floor(x * 1_000_000.0) / 1_000_000.0
-
-    def _fn(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        src = key[0]
-        cnt = state.get[0] if state.exists else 0
-        w = float(weights.get(src, default_weight))
-        phase = (int(hashlib.md5(f"{seed}:phase:{src}".encode())
-                     .hexdigest()[:8], 16) % 1_000_000) / 1_000_000.0
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            return
-        batch = pd.concat(chunks)
-        ids = batch[id_col]
-        order = sorted(
-            range(len(batch)),
-            key=lambda i: (hashlib.md5(
-                f"{seed}:ord:{ids.iloc[i]}".encode()).hexdigest(),
-                ids.iloc[i]))
-        out = pd.DataFrame({
-            source_col: [src] * len(order),
-            id_col: [ids.iloc[i] for i in order],
-            "src_pos": [cnt + p + 1 for p in range(len(order))],
-            "slot": [_slot(cnt + p + 1, phase, w)
-                     for p in range(len(order))],
-        })
-        cnt += len(order)
-        state.update((cnt,))
-        yield out
-
-    return (rows.groupBy(source_col)
-            .applyInPandasWithState(_fn, out_schema, state_schema, "append",
-                                    GroupStateTimeout.NoTimeout))
+    itype = rows.schema[id_col].dataType.simpleString()
+    return _keyed_state(
+        rows, source_col, [id_col],
+        partial(_interleave_kernel, weights, default_weight, seed),
+        f"`{id_col}` {itype}, src_pos long, slot double", "cnt long")

@@ -29,12 +29,16 @@ from pyspark.sql.streaming.stateful_processor import (
     TimerValues,
 )
 
+from akka_stream_contrib_spark.streaming.stateful import (
+    _delay_decisions, _keep_alive_kernel)
+
 
 class KeepAliveProcessor(StatefulProcessor):
     """Per-key keep-alive (reference `KeepAliveConcat.scala:34-81`):
     pass elements through; whenever a key is idle for ``interval_ms`` of
     processing time, emit its last value flagged ``is_heartbeat=true`` and
-    re-arm — the repeat-last extrapolation.
+    re-arm — the repeat-last extrapolation. Its steps are
+    ``stateful._keep_alive_kernel``, the one ``keep_alive_stream`` runs.
 
     One timer per key is live at any moment (last write wins): input rows
     delete the pending timer and arm a fresh one, expiry re-arms itself, so
@@ -56,29 +60,26 @@ class KeepAliveProcessor(StatefulProcessor):
 
     def handleInputRows(self, key: Any, rows: Iterator[pd.DataFrame],
                         timer_values: TimerValues) -> Iterator[pd.DataFrame]:
-        last = None
-        for pdf in rows:
-            for v in pdf["value"]:
-                if pd.isna(v):
-                    # a NULL value cannot be extrapolated as a heartbeat;
-                    # int(NaN) would kill the whole streaming query
-                    continue
-                last = int(v)
-                yield pd.DataFrame(
-                    {self.key_col: [key[0]], "value": [last],
-                     "is_heartbeat": [False]})
-        if last is not None:
-            self.last.update((last,))
+        chunks = [c for c in rows if len(c)]
+        if chunks:
+            # keep_alive_stream's kernel: a NULL value passes through and
+            # is what the heartbeat repeats
+            out, last = _keep_alive_kernel(
+                key[0], (pd.concat(chunks)["value"].to_numpy(),), None)
+            yield self._frame(key, out)
+            self.last.update(last)
             self._rearm(timer_values)
 
     def handleExpiredTimer(self, key: Any, timer_values: TimerValues,
                            expired: ExpiredTimerInfo) -> Iterator[pd.DataFrame]:
         if self.last.exists():
-            (last,) = self.last.get()
-            yield pd.DataFrame(
-                {self.key_col: [key[0]], "value": [int(last)],
-                 "is_heartbeat": [True]})
+            out, _ = _keep_alive_kernel(key[0], None, tuple(self.last.get()))
+            yield self._frame(key, out)
         self._rearm(timer_values)
+
+    def _frame(self, key: Any, out) -> pd.DataFrame:
+        return pd.DataFrame({self.key_col: key[0], "value": out[0],
+                             "is_heartbeat": out[1]})
 
     def close(self) -> None:
         pass
@@ -110,9 +111,11 @@ class DelayFlowProcessor(StatefulProcessor):
     reference's timerScheduled→push behavior (DelayFlow.scala:135-152).
 
     ``strategy`` is the same (state_schema_ddl, init_state, next_delay)
-    triple: the strategy state persists in a per-key value state, buffered
-    elements in a list state keyed by their due processing time, and one
-    timer per due instant releases everything that has matured.
+    triple, run by ``stateful._delay_decisions``, the loop
+    ``delay_strategy_stream`` runs: the strategy state persists in a
+    per-key value state, buffered elements in a list state keyed by their
+    due processing time, and one timer per due instant releases everything
+    that has matured.
     """
 
     def __init__(self, strategy, key_col: str = "key") -> None:
@@ -134,20 +137,20 @@ class DelayFlowProcessor(StatefulProcessor):
         # than the Arrow batch size arrives as several pdfs, and per-chunk
         # sorting would feed seq 10050 to the strategy before seq 9990
         chunks = list(rows)
-        batch = pd.concat(chunks) if chunks else pd.DataFrame()
         immediate = []
-        if len(batch):
-            for _, r in batch.sort_values("seq").iterrows():
-                delay, st = self.next_delay(st, r)
+        if chunks:
+            batch, delays, st = _delay_decisions(
+                self.next_delay, st, pd.concat(chunks), "seq")
+            for seq, delay in zip(batch["seq"].tolist(), delays.tolist()):
                 if delay <= 0:
                     # non-positive delay pushes IMMEDIATELY (DelayFlow.
                     # scala:144-145 "if (delay <= Duration.Zero) push")
                     # instead of holding the element behind a timer until
                     # the next trigger (r9 ADVICE)
-                    immediate.append((int(r["seq"]), float(delay)))
+                    immediate.append((int(seq), delay))
                     continue
-                due = now + int(float(delay) * 1000)
-                self.pending.appendValue((int(r["seq"]), float(delay), due))
+                due = now + int(delay * 1000)
+                self.pending.appendValue((int(seq), delay, due))
                 self.handle.registerTimer(due)
         self.strategy_state.update(st)
         if immediate:

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import json
 import time
+from functools import partial
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -719,6 +722,245 @@ def test_sessionize_stream_numbering_matches_the_loop():
             assert got_state == want_state
 
 
+def _plain(x):
+    """Kernel output or state as nested lists, NaN as None, so two
+    replays compare with ==."""
+    if isinstance(x, np.ndarray):
+        x = x.tolist()
+    if isinstance(x, (list, tuple)):
+        return [_plain(v) for v in x]
+    return None if x is None or (isinstance(x, float) and np.isnan(x)) else x
+
+
+def _replay(kernel, batches):
+    """Thread the state through ``batches`` (tuples of column arrays);
+    return the per-batch outputs and the final state."""
+    outs, state = [], None
+    for arrays in batches:
+        out, state = kernel("k", arrays, state)
+        if out is not None:
+            outs.append(_plain(out))
+    return outs, _plain(state)
+
+
+def _cut(rng, cols):
+    """Cut stream-ordered columns into 1-5 contiguous micro-batches; rows
+    inside a batch arrive in any order."""
+    n = len(cols[0])
+    bounds = [0, *sorted(rng.choice(np.arange(1, n), min(
+        n - 1, int(rng.integers(0, 5))), replace=False).tolist()), n]
+    batches = []
+    for a, b in zip(bounds, bounds[1:]):
+        perm = rng.permutation(b - a)
+        batches.append(tuple(c[a:b][perm] for c in cols))
+    return batches
+
+
+def _draw_sessionize(rng, n):
+    from akka_stream_contrib_spark.streaming.stateful import _session_kernel
+    ts = np.cumsum(rng.choice([0, 1, 59, 61, 600], n)) * 1_000_000
+    eid = rng.permutation(n).astype(np.int64)
+    order = np.lexsort((eid, ts))
+    return partial(_session_kernel, 60_000_000), [ts[order], eid[order]]
+
+
+def _draw_accumulate(rng, n):
+    from akka_stream_contrib_spark.streaming.stateful import _accumulate_kernel
+    props = np.array(["a", "b", None, "None"], dtype=object)
+    return _accumulate_kernel, [np.arange(n), props[rng.integers(0, 4, n)]]
+
+
+def _draw_merge(rng, n):
+    from akka_stream_contrib_spark.streaming.stateful import (
+        CLOSE_INDEX, _merge_kernel)
+    idx = np.sort(rng.choice(3 * n, n, replace=False))     # gaps = omissions
+    branch = rng.integers(0, 3, n)
+    # any interleaving that keeps each branch's idx order, then every close
+    when = np.empty(n)
+    for b in range(3):
+        when[branch == b] = np.sort(rng.random(int((branch == b).sum())))
+    arrival = np.argsort(when, kind="stable")
+    return partial(_merge_kernel, 3), [
+        np.concatenate([branch[arrival], [0, 1, 2]]),
+        np.concatenate([idx[arrival], [CLOSE_INDEX] * 3]),
+        np.array([f"p{i}" for i in idx[arrival]] + [None] * 3, dtype=object)]
+
+
+def _draw_throttle(rng, n):
+    from akka_stream_contrib_spark.streaming.stateful import _throttle_kernel
+    tok = rng.random(n) < 0.3
+    seq = np.where(tok, np.nan, np.cumsum(~tok))
+    return _throttle_kernel, [tok, np.where(tok, rng.integers(0, 9, n), np.nan),
+                              seq, np.where(tok, np.nan, rng.integers(0, 5, n))]
+
+
+def _draw_delay(rng, n):
+    from akka_stream_contrib_spark.streaming import (
+        linear_increasing_delay_strategy)
+    from akka_stream_contrib_spark.streaming.stateful import _delay_kernel
+    strat = linear_increasing_delay_strategy(step_s=1.0, initial_s=0.5,
+                                             max_s=3.0)
+    flags = np.array([True, False, None], dtype=object)[rng.integers(0, 3, n)]
+    ts = (np.datetime64("2026-01-01T00:00:00", "ns")
+          + rng.integers(0, 10**12, n).astype("timedelta64[ns]"))
+    ts[rng.random(n) < 0.2] = np.datetime64("NaT")
+    cols = ["seq", "needs_increase", "ts"]
+    return (partial(_delay_kernel, strat, "key", "seq", "ts", cols),
+            [np.arange(n), flags, ts])
+
+
+def _draw_funnel(rng, n):
+    from akka_stream_contrib_spark.streaming.funnel import _funnel_kernel
+    types = np.array(["view", "click", "purchase", "other", None],
+                     dtype=object)[rng.integers(0, 5, n)]
+    ts = rng.integers(0, 10**9, n).astype(float)
+    ts[rng.random(n) < 0.2] = np.nan
+    return partial(_funnel_kernel, ["view", "click", "purchase"]), [types, ts]
+
+
+@pytest.mark.parametrize("draw,snapshot", [
+    (_draw_sessionize, False), (_draw_accumulate, False),
+    (_draw_merge, False), (_draw_throttle, False), (_draw_delay, False),
+    (_draw_funnel, True)],
+    ids=["sessionize", "accumulate", "merge_by_index", "throttle",
+         "delay_strategy", "funnel"])
+def test_stateful_kernel_is_cut_invariant(draw, snapshot):
+    """A stream cut anywhere into micro-batches, state threaded through,
+    gives what one batch gives: the same emitted rows in the same order
+    and the same final state. Snapshot kernels re-emit their cumulative
+    row per batch, so only the last emission is compared."""
+    rng = np.random.default_rng(12)
+    for _ in range(60):
+        kernel, cols = draw(rng, int(rng.integers(1, 40)))
+        want, want_state = _replay(kernel, [tuple(cols)])
+        got, got_state = _replay(kernel, _cut(rng, cols))
+        assert got_state == want_state
+        if snapshot:
+            assert got[-1:] == want[-1:]
+        else:
+            assert ([sum(c, []) for c in zip(*got)]
+                    == [sum(c, []) for c in zip(*want)])
+
+
+def test_preference_kernel_best_and_worst_do_not_depend_on_cuts():
+    """The batch's best and worst merge into state with the batch form's
+    tie-breaks, so any cut ends on the one-batch pair; only the ``upd``
+    counter (one per changing batch) differs."""
+    from akka_stream_contrib_spark.streaming.stateful import _preference_kernel
+    rng = np.random.default_rng(5)
+    kernel = partial(_preference_kernel, 1.0)
+    for _ in range(60):
+        n = int(rng.integers(1, 30))
+        score = rng.integers(0, 4, n).astype(float)
+        score[rng.random(n) < 0.2] = np.nan
+        cand = rng.permutation(n)
+        cols = [cand, np.array([f"t{c}" for c in cand], dtype=object), score]
+        want, want_state = _replay(kernel, [tuple(cols)])
+        got, got_state = _replay(kernel, _cut(rng, cols))
+        assert (got_state or [None])[:-1] == (want_state or [None])[:-1]
+        assert [o[:-1] for o in got[-1:]] == [o[:-1] for o in want[-1:]]
+
+
+class _FakeGroupState:
+    """The GroupState surface ``_keyed_state``'s body uses."""
+
+    def __init__(self, value=None, timed_out=False):
+        self.value, self.hasTimedOut, self.timeout_ms = value, timed_out, None
+
+    @property
+    def getOption(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+    def remove(self):
+        self.value = None
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_ms = ms
+
+
+def _run_group(kernel, cols, names, chunks, state, timeout_ms=None):
+    from akka_stream_contrib_spark.streaming.stateful import _group_fn
+    fn = _group_fn(kernel, cols, names, timeout_ms)
+    return list(fn(("k",), iter(chunks), state)), state
+
+
+def test_heavy_hitters_counters_do_not_depend_on_arrow_chunking():
+    """Misra-Gries runs once per micro-batch: a batch delivered as one
+    Arrow chunk or as many leaves the same counters, even with more
+    distinct items than ``capacity``."""
+    from akka_stream_contrib_spark.streaming.stateful import _mg_kernel
+    rng = np.random.default_rng(3)
+    kernel = partial(_mg_kernel, 4)
+    for _ in range(30):
+        items = pd.DataFrame({"item": [f"i{v}" for v in rng.zipf(1.5, 200)]})
+        cuts = np.sort(rng.choice(np.arange(1, 200), 5, replace=False))
+        chunks = [items.iloc[a:b] for a, b in zip([0, *cuts], [*cuts, 200])]
+        one, s1 = _run_group(kernel, ["item"], ["bucket", "item", "mg_count"],
+                             [items], _FakeGroupState())
+        many, s2 = _run_group(kernel, ["item"], ["bucket", "item", "mg_count"],
+                              chunks, _FakeGroupState())
+        assert s1.value == s2.value and len(s1.value[0]) <= 4
+        pd.testing.assert_frame_equal(one[0], many[0])
+
+
+def test_keyed_state_timeout_calls_flush_or_heartbeat():
+    """A timeout call reaches the kernel with no arrays: accumulate
+    flushes its open run and removes the state, keep_alive re-emits the
+    last value and stays armed; a row-less call touches nothing."""
+    from akka_stream_contrib_spark.streaming.stateful import (
+        _accumulate_kernel, _keep_alive_kernel)
+    names = ["key", "prop", "cnt", "first_seq"]
+    st = _FakeGroupState(("a", 3, 7), timed_out=True)
+    out, st = _run_group(_accumulate_kernel, ["seq", "prop"], names, [], st)
+    assert out[0].values.tolist() == [["k", "a", 3, 7]] and st.value is None
+    st = _FakeGroupState((None,), timed_out=True)
+    out, st = _run_group(_keep_alive_kernel, ["value"],
+                         ["key", "value", "is_heartbeat"], [], st, 500)
+    assert out[0].values.tolist() == [["k", None, True]]
+    assert st.value == (None,) and st.timeout_ms == 500
+    st = _FakeGroupState(("a", 1, 1))
+    assert _run_group(_accumulate_kernel, ["seq", "prop"], names,
+                      [pd.DataFrame({"seq": [], "prop": []})], st)[0] == []
+    assert st.value == ("a", 1, 1)
+
+
+def test_keep_alive_kernel_passes_null_values_through():
+    """The batch ``keep_alive_concat`` rule: a NULL value passes through,
+    and the heartbeat repeats the last row's value, NULL included."""
+    from akka_stream_contrib_spark.streaming.stateful import _keep_alive_kernel
+    out, st = _keep_alive_kernel("k", (np.array([4.0, np.nan]),), None)
+    assert _plain(out) == [[4.0, None], [False, False]] and st == (None,)
+    out, st = _keep_alive_kernel("k", (np.array([np.nan, 9.0]),), st)
+    assert st == (9,)
+    assert _plain(_keep_alive_kernel("k", None, st)[0]) == [[9], [True]]
+    assert _keep_alive_kernel("k", None, None) == (None, None)
+
+
+def test_interleave_kernel_orders_by_md5_and_continues_positions():
+    """Within a batch rows go in (md5(seed, id), id) order, the batch
+    form's; positions continue from state and slots truncate at 6 dp."""
+    import hashlib
+    import math
+
+    from akka_stream_contrib_spark.streaming.stateful import _interleave_kernel
+    kernel = partial(_interleave_kernel, {"a": 3.0}, 1.0, "s0")
+    phase = (int(hashlib.md5(b"s0:phase:a").hexdigest()[:8], 16)
+             % 1_000_000) / 1_000_000.0
+    state, seen = None, []
+    for batch in ([5, 1, 9], [2, 7], [4]):
+        (ids, pos, slot), state = kernel("a", (np.array(batch),), state)
+        assert ids == sorted(batch, key=lambda i: hashlib.md5(
+            f"s0:ord:{i}".encode()).hexdigest())
+        assert slot.tolist() == [
+            math.floor((p - phase) / 3.0 * 1_000_000.0) / 1_000_000.0
+            for p in pos.tolist()]
+        seen += pos.tolist()
+    assert seen == list(range(1, 7)) and state == (6,)
+
+
 def test_sessionize_stream_orders_tied_ts_by_event_id(spark, tmp_path):
     """Events tied on ts are numbered in event_id order, as the batch form
     numbers them, whatever order they land in: the rows arrive in
@@ -1151,6 +1393,38 @@ def test_funnel_stream_restart_under_load_and_idle(spark, tmp_path):
     n_before = spark.read.parquet(out_dir).count()
     run()
     assert spark.read.parquet(out_dir).count() == n_before
+
+
+def test_funnel_stream_matches_batch_in_a_non_utc_session(spark, tmp_path):
+    """Stream and batch milestones both come from the JVM's epoch_micros,
+    so they agree whatever the session time zone is."""
+    from akka_stream_contrib_spark.streaming import (funnel_milestones,
+                                                     funnel_stream)
+    feed = tmp_path / "funnel_tz_feed"
+    feed.mkdir()
+    _feed_json(feed, "b1.json", [
+        {"user_id": 1, "event_type": "view", "ts": "2026-03-08 01:30:00"},
+        {"user_id": 1, "event_type": "click", "ts": "2026-03-08 03:10:00"},
+        {"user_id": 2, "event_type": "view", "ts": "2026-01-01 23:30:00"},
+        {"user_id": 2, "event_type": "purchase", "ts": "2026-01-02 00:10:00"},
+    ])
+    schema = "user_id long, event_type string, ts timestamp"
+    key = "spark.sql.session.timeZone"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        q = (funnel_stream(spark.readStream.schema(schema).json(str(feed)))
+             .writeStream.format("memory").queryName("funnel_tz")
+             .option("checkpointLocation", str(tmp_path / "funnel_tz_ck"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        got = sorted(tuple(r) for r in
+                     spark.sql("select * from funnel_tz").collect())
+        want = sorted(tuple(r) for r in funnel_milestones(
+            spark.read.schema(schema).json(str(feed))).collect())
+    finally:
+        spark.conf.set(key, saved)
+    assert got == want and len(got) == 2
 
 
 def test_histogram_stream_restart_replay_and_under_load(spark, tmp_path):
@@ -1706,47 +1980,177 @@ def test_linear_delay_strategy_null_flag_resets():
 
 
 def test_stateful_stream_key_type_follows_input(spark, tmp_path):
-    # r9 ADVICE: merge_by_index_stream / delay_strategy_stream hard-coded
-    # LongType for the key column; a string key must flow through with its
-    # own type (schema check — no query start needed)
+    # r9 ADVICE: a twin that hard-codes LongType for the key column fails
+    # Arrow conversion on a string key; every twin's key keeps its input
+    # type (schema check — no query start needed)
     from pyspark.sql.types import StringType
     from akka_stream_contrib_spark.streaming import (
-        delay_strategy_stream, linear_increasing_delay_strategy,
-        merge_by_index_stream)
+        accumulate_while_unchanged_stream, delay_strategy_stream,
+        funnel_stream, heavy_hitters_stream, interleave_stream,
+        keep_alive_stream, linear_increasing_delay_strategy,
+        merge_by_index_stream, preference_pairs_stream, sessionize_stream,
+        token_throttle_stream)
     feed = tmp_path / "kt_feed"
     feed.mkdir()
-    src = spark.readStream.schema(
-        "key string, branch long, idx long, payload string").json(str(feed))
-    assert merge_by_index_stream(src, n_branches=2).schema["key"].dataType \
-        == StringType()
-    src2 = spark.readStream.schema(
-        "key string, seq long, needs_increase boolean, ts timestamp"
-    ).json(str(feed))
     strat = linear_increasing_delay_strategy(step_s=1.0, initial_s=1.0,
                                              max_s=5.0)
-    assert delay_strategy_stream(src2, strat).schema["key"].dataType \
-        == StringType()
+    twins = [
+        ("key string, is_token boolean, amount long, seq long, cost long",
+         token_throttle_stream, "key"),
+        ("key string, value long",
+         lambda s: keep_alive_stream(s, interval_ms=1000), "key"),
+        ("key string, seq long, prop string",
+         accumulate_while_unchanged_stream, "key"),
+        ("user_id string, ts timestamp, event_id long",
+         lambda s: sessionize_stream(s, gap_s=60), "key"),
+        ("key string, branch long, idx long, payload string",
+         lambda s: merge_by_index_stream(s, n_branches=2), "key"),
+        ("key string, seq long, needs_increase boolean, ts timestamp",
+         lambda s: delay_strategy_stream(s, strat), "key"),
+        ("prompt_id string, cand_id long, text string, score double",
+         preference_pairs_stream, "prompt_id"),
+        ("doc_id long, source string",
+         lambda s: interleave_stream(s, {"a": 1.0}), "source"),
+        ("user_id string, event_type string, ts timestamp",
+         funnel_stream, "key"),
+    ]
+    for schema, twin, key in twins:
+        src = spark.readStream.schema(schema).json(str(feed))
+        assert twin(src).schema[key].dataType == StringType(), schema
+    # heavy_hitters keys its state by the hash bucket, a bigint
+    src = spark.readStream.schema("item string").json(str(feed))
+    assert heavy_hitters_stream(src).schema["bucket"].dataType == LongType()
 
 
-def test_merge_by_index_stream_string_key_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("twin", ["merge_by_index", "accumulate_while_unchanged"])
+def test_stateful_stream_string_key_roundtrip(spark, tmp_path, twin):
     # and the string key actually survives Arrow conversion end-to-end
-    from akka_stream_contrib_spark.streaming import merge_by_index_stream
+    from akka_stream_contrib_spark.streaming import (
+        accumulate_while_unchanged_stream, merge_by_index_stream)
     feed = tmp_path / "sk_feed"
     feed.mkdir()
-    _feed_json(feed, "b1.json", [
-        {"key": "alpha", "branch": 0, "idx": 0, "payload": "a"},
-        {"key": "alpha", "branch": 1, "idx": 1, "payload": "b"},
-    ])
-    src = spark.readStream.schema(
-        "key string, branch long, idx long, payload string").json(str(feed))
-    q = (merge_by_index_stream(src, n_branches=2)
-         .writeStream.format("memory").queryName("mbsk")
+    if twin == "merge_by_index":
+        rows = [{"key": "alpha", "branch": 0, "idx": 0, "payload": "a"},
+                {"key": "alpha", "branch": 1, "idx": 1, "payload": "b"}]
+        schema = "key string, branch long, idx long, payload string"
+        build = partial(merge_by_index_stream, n_branches=2)
+        cols, want = "key, idx, pos", [("alpha", 0, 0), ("alpha", 1, 1)]
+    else:
+        rows = [{"key": "alpha", "seq": 1, "prop": "a"},
+                {"key": "alpha", "seq": 2, "prop": "b"}]
+        schema = "key string, seq long, prop string"
+        build = accumulate_while_unchanged_stream
+        cols, want = "key, prop, cnt", [("alpha", "a", 1)]
+    _feed_json(feed, "b1.json", rows)
+    src = spark.readStream.schema(schema).json(str(feed))
+    q = (build(src).writeStream.format("memory").queryName(f"sk_{twin}")
          .option("checkpointLocation", str(tmp_path / "sk_ck"))
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
-    got = [(r.key, r.idx, r.pos) for r in
-           spark.sql("select * from mbsk order by pos").collect()]
-    assert got == [("alpha", 0, 0), ("alpha", 1, 1)]
+    got = [tuple(r) for r in
+           spark.sql(f"select {cols} from sk_{twin} order by 2").collect()]
+    assert got == want
+
+
+def test_accumulate_while_unchanged_stream_null_prop_matches_batch(spark,
+                                                                   tmp_path):
+    """A NULL property is its own value, not the string 'None': the stream
+    closes the same runs as the batch twin, which compares null-safely
+    (NULL after 'a' is a change, 'None' after NULL is another)."""
+    from akka_stream_contrib_spark.operators.accumulate import (
+        accumulate_while_unchanged)
+    from akka_stream_contrib_spark.streaming import (
+        accumulate_while_unchanged_stream)
+    feed = tmp_path / "anull_feed"
+    feed.mkdir()
+    rows = [{"key": 1, "seq": 1, "prop": "a"},
+            {"key": 1, "seq": 2, "prop": None},
+            {"key": 1, "seq": 3, "prop": None},
+            {"key": 1, "seq": 4, "prop": "None"},
+            {"key": 1, "seq": 5, "prop": "b"}]
+    _feed_json(feed, "b1.json", rows)
+    schema = "key long, seq long, prop string"
+    q = (accumulate_while_unchanged_stream(
+            spark.readStream.schema(schema).json(str(feed)))
+         .writeStream.format("memory").queryName("anull")
+         .option("checkpointLocation", str(tmp_path / "anull_ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(60)
+    got = [tuple(r) for r in spark.sql(
+        "select key, prop, cnt, first_seq from anull order by first_seq")
+        .collect()]
+    batch = (spark.read.schema(schema).json(str(feed))
+             .transform(accumulate_while_unchanged(
+                 "prop", [F.count(F.lit(1)).alias("cnt"),
+                          F.min("seq").alias("first_seq")],
+                 partition_by=["key"]))
+             .orderBy("first_seq").collect())
+    # the stream keeps the last run open in state; every closed run matches
+    want = [(r.key, r.prop, r.cnt, r.first_seq) for r in batch][:-1]
+    assert got == want
+    assert want == [(1, "a", 1, 1), (1, None, 2, 2), (1, "None", 1, 4)]
+
+
+def test_keep_alive_stream_null_value_passes_through(spark, tmp_path):
+    """The batch keep_alive_concat rule in the stream: a NULL value
+    passes through, and the heartbeat repeats it, instead of the NULL
+    failing the query."""
+    from akka_stream_contrib_spark.streaming import keep_alive_stream
+    feed = tmp_path / "kanull_feed"
+    feed.mkdir()
+    (feed / "b1.json").write_text('{"key": 1, "value": null}')
+    src = spark.readStream.schema("key long, value long").json(str(feed))
+    q = (keep_alive_stream(src, interval_ms=1500)
+         .writeStream.format("memory").queryName("kanull")
+         .option("checkpointLocation", str(tmp_path / "kanull_ck"))
+         .trigger(processingTime="500 milliseconds").start())
+    try:
+        t0 = time.monotonic()
+        rows = []
+        while time.monotonic() - t0 < 45 and q.isActive:
+            rows = spark.sql("select * from kanull").collect()
+            if any(r.is_heartbeat for r in rows):
+                break
+            time.sleep(0.5)
+        assert q.exception() is None
+        assert (1, None, False) in [tuple(r) for r in rows]
+        hb = [r for r in rows if r.is_heartbeat]
+        assert hb and all(r.key == 1 and r.value is None for r in hb)
+    finally:
+        q.stop()
+
+
+def test_keep_alive_processor_passes_null_values_through():
+    # the transformWithState form runs the same kernel: the NULL row is
+    # passed through (it used to be dropped) and the heartbeat repeats it.
+    # Driven with fake state handles (the runtime needs protobuf).
+    from akka_stream_contrib_spark.streaming.tws import KeepAliveProcessor
+
+    class _Val:
+        def __init__(self): self._v = None
+        def exists(self): return self._v is not None
+        def get(self): return self._v
+        def update(self, v): self._v = v
+
+    class _Handle:
+        def __init__(self): self.timers = []
+        def listTimers(self): return list(self.timers)
+        def deleteTimer(self, t): self.timers.remove(t)
+        def registerTimer(self, t): self.timers.append(t)
+
+    class _TV:
+        def getCurrentProcessingTimeInMs(self): return 1_000
+
+    p = KeepAliveProcessor(interval_ms=500)
+    p.handle, p.last = _Handle(), _Val()
+    out = list(p.handleInputRows(
+        (3,), iter([pd.DataFrame({"value": [7.0, np.nan]})]), _TV()))
+    assert [_plain(list(r)) for r in pd.concat(out).itertuples(index=False)] \
+        == [[3, 7.0, False], [3, None, False]]
+    assert p.handle.timers == [1_500]
+    hb = list(p.handleExpiredTimer((3,), _TV(), None))
+    assert [_plain(list(r)) for r in hb[0].itertuples(index=False)] \
+        == [[3, None, True]]
 
 
 def test_delay_flow_processor_zero_delay_emits_in_batch():

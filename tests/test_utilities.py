@@ -287,3 +287,31 @@ def test_no_unregistered_caches_in_package():
         elif n_persist:
             offenders.append(f"{rel}: {n_persist} .persist() calls")
     assert not offenders, offenders
+
+
+def test_apply_in_pandas_with_state_only_in_the_keyed_state_shell():
+    """Grep gate (one keyed-state shell): ``applyInPandasWithState`` is
+    called only inside ``streaming/stateful.py::_keyed_state``; a stateful
+    twin is a kernel plus one ``_keyed_state`` call, never a hand-rolled
+    shell of its own."""
+    import ast
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "akka_stream_contrib_spark")
+    sites = []
+
+    def walk(node, rel, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, rel, child.name)
+                continue
+            if (isinstance(child, ast.Attribute)
+                    and child.attr == "applyInPandasWithState"):
+                sites.append((rel, owner))
+            walk(child, rel, owner)
+
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        walk(ast.parse(open(path).read()), os.path.relpath(path, pkg), None)
+    assert sites == [("streaming/stateful.py", "_keyed_state")], sites
